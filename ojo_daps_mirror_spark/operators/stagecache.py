@@ -1,29 +1,32 @@
-"""Generic multi-part materialized stage cache for operator families.
+"""Materialized stage cache: the one mechanism for shared operator stages.
 
 Several query families share one expensive upstream chain that every
-member key used to rebuild from scratch. operators/suffix.py pioneered
-the fix for the ExactSubstr family: materialize the shared stage to
-PARQUET once per (application, inputs, config) and let every consumer
-read the finished artifact — parquet because executor-cache blocks get
-LRU-evicted mid-session (measured; see suffix.py's module docstring),
-and because a written table is exactly what a 100 TB pipeline keeps in
-the lake next to the corpus.
+member key used to rebuild from scratch. The fix is to materialize the
+shared stage to PARQUET once per (application, inputs, config) and let
+every consumer read the finished artifact — parquet because executor-
+cache blocks get LRU-evicted mid-session (measured on the suffix sort;
+see suffix.py's module docstring), and because a written table is
+exactly what a 100 TB pipeline keeps in the lake next to the corpus.
 
-This module generalises that pattern to stages with SEVERAL dependent
-parts (e.g. the consensus-clustering family's edges → ensemble labels →
-votes → level-1 components → level-2 components chain): each part is
-written as its own parquet subdir, built from the READ-BACK frames of
-the parts before it — so the parquet writes double as the lineage cuts
-the iterative builders need, and any consumer can open any part without
-re-running its ancestors.
+A stage may have SEVERAL dependent parts (e.g. the consensus-clustering
+family's edges → ensemble labels → votes → level-1 components →
+level-2 components chain): each part is written as its own parquet
+subdir, built from the READ-BACK frames of the parts before it — so
+the parquet writes double as the lineage cuts the iterative builders
+need, and any consumer can open any part without re-running its
+ancestors. Users: the ExactSubstr suffix sort (operators/suffix.py,
+one part), its merged-spans table (plans/llm_plans139.py) and the
+consensus family (plans/community_plans.py).
 
-Storage layouts and hardening follow suffix.py exactly:
+Storage layouts and hardening:
 
 - default per-app layout: ``<tmp>/ojo_stage_<appId>/<family>_v<V>_<tag>``,
   reaped by ``clear_cache``/atexit on normal exit and by a 48 h
   mtime-TTL sweep of orphaned ``ojo_stage_*`` dirs from crashed
   processes (liveness = freshest mtime of the dir OR any child, so the
-  in-process heartbeat keeps a live long session's stage safe).
+  in-process heartbeat keeps a live long session's stage safe). The
+  same per-app dir hosts operators' scratch work dirs (``work_dir``),
+  so one reaper covers every temp tree the package writes.
 - shared-dir layout (``SPARK_GRAFT_STAGE_CACHE_DIR``, a lake path on a
   real cluster): stages are published via write-to-tmp + atomic rename,
   reused read-if-exists across sessions, crashed-writer ``__tmp_``
@@ -36,7 +39,9 @@ Storage layouts and hardening follow suffix.py exactly:
 
 Builds are atomic in both layouts (tmp + rename): a crash mid-build
 never leaves a half-written stage that a later run in the same
-application would mistake for complete.
+application would mistake for complete. Callers fold
+``input_fingerprint`` of their inputs into the stage ``key``, so a
+re-landed input builds a fresh stage instead of serving a stale one.
 """
 
 from __future__ import annotations
@@ -87,8 +92,7 @@ def input_fingerprint(path: str) -> str:
 def _sweep_stale() -> None:
     """Remove ojo_stage_* temp dirs whose owning app is long gone.
 
-    Same liveness rule as suffix._sweep_stale (ADVICE r6): a dir is
-    live iff the freshest mtime of the dir or ANY direct child is
+    A dir is live iff the freshest mtime of the dir or ANY direct child is
     within the TTL — the heartbeat utimes child stage dirs, and a
     parent-only check would reap a live >48 h session's stage.
     """
@@ -121,11 +125,24 @@ def _sweep_stale() -> None:
             pass
 
 
+def _app_dir(app_id: str) -> str:
+    return os.path.join(tempfile.gettempdir(), f"ojo_stage_{app_id}")
+
+
 def _stage_path(app_id: str, family: str, version: int, tag: str) -> str:
-    base = os.environ.get("SPARK_GRAFT_STAGE_CACHE_DIR") or os.path.join(
-        tempfile.gettempdir(), f"ojo_stage_{app_id}"
-    )
+    base = os.environ.get("SPARK_GRAFT_STAGE_CACHE_DIR") or _app_dir(app_id)
     return os.path.join(base, f"{family}_v{version}_{tag}")
+
+
+def work_dir(spark: SparkSession, name: str) -> str:
+    """Path of a scratch work dir ``name`` under this application's
+    per-app dir — always the temp dir, never the shared stage dir, so
+    ``clear_cache`` reaps it on exit and the TTL sweep after a crash.
+    The caller creates (and may wipe) the dir itself."""
+    _sweep_stale()
+    base = _app_dir(spark.sparkContext.applicationId)
+    _DIRS.add(base)
+    return os.path.join(base, name)
 
 
 def materialized_stage(
@@ -156,7 +173,7 @@ def materialized_stage(
     if hit is not None:
         # Heartbeat for the cross-process stale sweep (stage dir AND
         # its parent — the sweep reaps at the parent level), plus the
-        # post-clearCache persist re-assert (suffix.py's contract).
+        # post-clearCache persist re-assert.
         for p in (path, os.path.dirname(path)):
             try:
                 os.utime(p)
@@ -220,8 +237,10 @@ def materialized_stage(
 
 
 def clear_cache(spark: SparkSession | None = None) -> None:
-    """Unpersist and remove this process's per-app stage dirs (atexit;
-    shared-dir stages are deliberately left for the operator to GC)."""
+    """Unpersist and remove this process's per-app stage and work dirs
+    (atexit; shared-dir stages are deliberately left for the operator
+    to GC). ``spark`` is accepted for call-site symmetry; one process
+    holds one application, so everything this process wrote goes."""
     for parts in list(_CACHE.values()):
         for df in parts.values():
             try:

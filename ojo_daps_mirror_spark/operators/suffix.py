@@ -13,9 +13,9 @@ the family — the oracle side already factors it as shared CTEs, and
 ``adjacent_suffixes`` is the Spark twin: ONE range-partitioned external
 sort (operators/rank.py attach_prev — pid-local lag windows plus a
 one-row-per-shard boundary handoff, never a single-reducer window),
-materialized ONCE per (application, sf_dir, cap, stride) so every
-composing query in a session reads the finished stage instead of
-re-sorting.
+materialized ONCE per (application, sf_dir, cap, stride, input
+fingerprint) so every composing query in a session reads the finished
+stage instead of re-sorting.
 
 The stage is materialized to PARQUET, not executor cache, on purpose.
 An early version used .persist(): correct, but in a long session the
@@ -26,14 +26,11 @@ session served from cache in 0.5 s. A written table cannot be evicted,
 is exactly the artifact a 100 TB pipeline would keep in the lake next
 to the corpus (the suffix-array build is the expensive step; its
 output is reused by every downstream dedup/boilerplate pass), and at
-local scale costs one ~seconds write. Set
-``SPARK_GRAFT_SUFFIX_CACHE_DIR`` to place it (a lake path on a real
-cluster; stages there are reused read-if-exists across sessions,
-published via atomic rename, and left for the operator to GC);
-default is a per-application directory under the system temp dir,
-removed by ``clear_cache`` — registered via ``atexit`` so normal
-process exit reaps it, with a mtime-TTL sweep of orphaned
-``ojo_suffix_*`` dirs from crashed processes at first stage write.
+local scale costs one ~seconds write. Storage, publish and reaping are
+operators/stagecache.py's (family ``suffix``): a per-application
+temp dir by default, or ``SPARK_GRAFT_STAGE_CACHE_DIR`` for a shared
+lake dir. The key folds in the documents' input fingerprint, so
+re-landing the corpus within one application builds a fresh stage.
 
 **The scale knob — content-defined suffix sampling.** Exact mode
 explodes EVERY position: the sort input is ~×cap the corpus bytes
@@ -69,88 +66,24 @@ which is the unconditional default.
 
 from __future__ import annotations
 
-import atexit
-import hashlib
 import os
-import shutil
-import tempfile
-import time
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import load_table
 from .rank import attach_prev_next
-
-_CACHE: dict[tuple[str, str, int, int], DataFrame] = {}
-_DIRS: set[str] = set()
-
-# Stale per-app stage dirs from crashed/killed processes (clear_cache
-# never ran) are reaped on this process's first stage write: anything
-# matching ojo_suffix_* in the temp dir and untouched for this long is
-# assumed orphaned. Live sessions touch their stage at write time AND
-# on every in-process cache hit (os.utime in adjacent_suffixes), and
-# the TTL is far past any plausible session length, so only genuinely
-# dead apps' debris crosses the threshold — a concurrent long-lived
-# session cannot have its live stage reaped out from under it.
-_STALE_TTL_SECS = 48 * 3600
-_swept = False
-
-
-def _sweep_stale() -> None:
-    """Remove ojo_suffix_* temp dirs whose owning app is long gone."""
-    global _swept
-    if _swept:
-        return
-    _swept = True
-    root = tempfile.gettempdir()
-    cutoff = time.time() - _STALE_TTL_SECS
-    try:
-        entries = os.listdir(root)
-    except OSError:  # pragma: no cover - unreadable tempdir
-        return
-    for name in entries:
-        if not name.startswith("ojo_suffix_"):
-            continue
-        path = os.path.join(root, name)
-        if path in _DIRS or any(d.startswith(path) for d in _DIRS):
-            continue
-        try:
-            # Liveness = the freshest mtime of the dir OR any direct
-            # child: the in-process heartbeat utimes the stage subdir
-            # (and, since r7, the parent too — belt), but a stage
-            # written by older code only refreshes the child, and a
-            # plain parent-mtime check would reap a live session's
-            # stage out from under its persisted reader (suspenders).
-            mtimes = [os.path.getmtime(path)]
-            for child in os.listdir(path):
-                try:
-                    mtimes.append(
-                        os.path.getmtime(os.path.join(path, child))
-                    )
-                except OSError:
-                    pass
-            if max(mtimes) < cutoff:
-                shutil.rmtree(path, ignore_errors=True)
-        except OSError:  # pragma: no cover - raced with another reaper
-            pass
-
+from .stagecache import (  # noqa: F401 - clear_cache is re-exported
+    clear_cache,
+    input_fingerprint,
+    materialized_stage,
+)
 
 # Stage format version: bumped whenever the materialized schema
 # changes (v2 added the precomputed `lcp` column; v3 added `nlcp`,
 # the sort-SUCCESSOR's lcp), so a shared-dir stage written by older
 # code is never misread by newer consumers.
 _STAGE_VERSION = 3
-
-
-def _stage_path(app_id: str, sf_dir: str, cap: int, stride: int) -> str:
-    base = os.environ.get("SPARK_GRAFT_SUFFIX_CACHE_DIR") or os.path.join(
-        tempfile.gettempdir(), f"ojo_suffix_{app_id}"
-    )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    return os.path.join(
-        base, f"cap{cap}_s{stride}_v{_STAGE_VERSION}_{tag}"
-    )
 
 ANCHOR_W = 8  # content-anchor window (chars) for the sampled mode
 
@@ -159,8 +92,7 @@ ANCHOR_W = 8  # content-anchor window (chars) for the sampled mode
 # stress record (SURVEY §6.4): the 16x replica corpus (~1.1 GB
 # estimated sort input at cap 48) exact-sorts fine on this 128 GiB /
 # 32-thread box, the 64x one (~4.6 GB) thrashes the external sort.
-# 2 GB splits the measured wall; override with
-# SPARK_GRAFT_SUFFIX_EXACT_BUDGET (bytes) for other hardware.
+# 2 GB splits the measured wall; recalibrate it for other hardware.
 EXACT_SORT_BUDGET_BYTES = 2_000_000_000
 # documents.parquet compresses the synthetic text ~2.5x; the estimate
 # only needs to be monotone in corpus volume and right within ~2x,
@@ -191,13 +123,8 @@ def auto_stride(sf_dir: str, cap: int) -> int:
     The 64x stress showed exact-mode thrash is predictable from this
     volume estimate — so predict it instead of hitting it."""
     est = _estimate_sort_bytes(sf_dir, cap)
-    budget = int(
-        os.environ.get(
-            "SPARK_GRAFT_SUFFIX_EXACT_BUDGET", EXACT_SORT_BUDGET_BYTES
-        )
-    )
     stride = 1
-    while est > budget * stride:
+    while est > EXACT_SORT_BUDGET_BYTES * stride:
         stride *= 2
     return stride
 
@@ -269,39 +196,33 @@ def adjacent_suffixes(
     removed; LCP is symmetric, so the successor's lcp is one more
     column of the same sorted window pass).
 
-    Materialized once per (application, sf_dir, cap, stride) and shared
-    by all ExactSubstr-family consumers in the session. ``stride`` > 1
+    Materialized once per (application, sf_dir, cap, stride, input
+    fingerprint) as the stagecache family ``suffix`` and shared by all
+    ExactSubstr-family consumers in the session. ``stride`` > 1
     switches to content-anchored sampling (module docstring).
     """
     stride = resolved_stride(stride, sf_dir, cap)
-    key = (spark.sparkContext.applicationId, sf_dir, cap, stride)
-    hit = _CACHE.get(key)
-    if hit is not None:
-        # Heartbeat for the cross-process stale sweep: a long-lived
-        # session keeps its stage fresh on every reuse, so another
-        # process's _sweep_stale never mistakes a live stage for
-        # crashed-app debris (persist eviction degrades to a read of
-        # this path — it must still exist). The sweep reaps by the
-        # TOP-LEVEL ojo_suffix_* dir, and touching a child does not
-        # refresh the parent's mtime — so utime BOTH the stage subdir
-        # (shared-dir layouts GC per-stage) and its parent (the
-        # per-app tempdir layout the sweep targets).
-        hb = _stage_path(key[0], sf_dir, cap, stride)
-        for p in (hb, os.path.dirname(hb)):
-            try:
-                os.utime(p)
-            except OSError:
-                pass
-        # An external spark.catalog.clearCache() (bench key isolation,
-        # sweep harnesses) drops this handle's persist registration;
-        # without re-asserting it, every later consumer pays one
-        # parquet scan PER SUBTREE for the rest of the session. The
-        # parquet floor stays the worst case; block memory stays the
-        # designed fast path.
-        sl = hit.storageLevel
-        if not (sl.useMemory or sl.useDisk):
-            hit.persist()
-        return hit
+    key = "|".join(
+        (
+            sf_dir,
+            f"cap{cap}",
+            f"s{stride}",
+            input_fingerprint(os.path.join(sf_dir, "documents.parquet")),
+        )
+    )
+    return materialized_stage(
+        spark,
+        "suffix",
+        _STAGE_VERSION,
+        key,
+        [("stage", lambda parts: _build_stage(spark, sf_dir, cap, stride))],
+    )["stage"]
+
+
+def _build_stage(
+    spark: SparkSession, sf_dir: str, cap: int, stride: int
+) -> DataFrame:
+    """The unmaterialized plan of ``adjacent_suffixes``' frame."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     positions = docs.select(
         "doc_id",
@@ -325,7 +246,7 @@ def adjacent_suffixes(
         F.col("p").cast("bigint").alias("p"),
         F.expr(f"substring(text, p, {cap})").alias("suf"),
     )
-    ordered = (
+    return (
         attach_prev_next(
             sufs,
             ["suf", "doc_id", "p"],
@@ -347,57 +268,6 @@ def adjacent_suffixes(
         )
         .drop("ns")
     )
-    _sweep_stale()
-    path = _stage_path(key[0], sf_dir, cap, stride)
-    shared = bool(os.environ.get("SPARK_GRAFT_SUFFIX_CACHE_DIR"))
-    if shared and os.path.exists(os.path.join(path, "_SUCCESS")):
-        # Another session (or a prior run of this one) already built the
-        # identical (sf_dir, cap, stride) stage on the shared dir:
-        # read-if-exists instead of overwrite, so concurrent sessions
-        # never delete files out from under each other's readers.
-        pass
-    elif shared:
-        # A writer that crashed between its tmp write and the rename
-        # leaves {path}.__tmp_{app} debris the per-process sweep never
-        # covers (shared dirs are the operator's to GC) — reap any
-        # tmp sibling older than the stale TTL before writing ours.
-        parent = os.path.dirname(path)
-        cutoff = time.time() - _STALE_TTL_SECS
-        try:
-            for name in os.listdir(parent):
-                if "__tmp_" not in name:
-                    continue
-                sib = os.path.join(parent, name)
-                try:
-                    if os.path.getmtime(sib) < cutoff:
-                        shutil.rmtree(sib, ignore_errors=True)
-                except OSError:
-                    pass
-        except OSError:
-            pass
-        # Concurrency-safe publish: write under a per-app temp name,
-        # then atomically rename into place; the rename loser discards
-        # its copy and reads the winner's.
-        tmp = f"{path}.__tmp_{key[0]}"
-        ordered.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-        # Shared-dir stages are the operator's to garbage-collect
-        # (lake-resident artifact) — never added to _DIRS.
-    else:
-        ordered.write.mode("overwrite").parquet(path)
-        _DIRS.add(path)
-    # Best of both tiers: the parquet file is the un-evictable floor
-    # (a 273-query bench's shuffle traffic pushes the stage out of the
-    # OS page cache, making every later consumer pay a real disk read),
-    # and persist() serves repeat consumers from block memory while
-    # it's available — eviction degrades to the parquet read, never to
-    # a re-sort.
-    stage = spark.read.parquet(path).persist()
-    _CACHE[key] = stage
-    return stage
 
 
 def adjacent_lcp(cap: int, suf: str = "suf", prev: str = "ps") -> Column:
@@ -408,34 +278,3 @@ def adjacent_lcp(cap: int, suf: str = "suf", prev: str = "ps") -> Column:
         f"size(filter(sequence(1, {cap}),"
         f" L -> substring({suf}, 1, L) = substring({prev}, 1, L)))"
     ).cast("bigint")
-
-
-def clear_cache(spark: SparkSession | None = None) -> None:
-    """Drop the in-process handles and delete the materialized stage
-    directories (all of them, or only the given session's). Only
-    removes directories this process wrote — an operator-managed
-    SPARK_GRAFT_SUFFIX_CACHE_DIR on shared storage is the operator's
-    to garbage-collect."""
-    app = spark.sparkContext.applicationId if spark is not None else None
-    for key in list(_CACHE):
-        if app is None or key[0] == app:
-            try:
-                _CACHE[key].unpersist()
-            except Exception:  # pragma: no cover - session already gone
-                pass
-            del _CACHE[key]
-    for path in list(_DIRS):
-        if app is None or f"ojo_suffix_{app}" in path:
-            shutil.rmtree(path, ignore_errors=True)
-            _DIRS.discard(path)
-            parent = os.path.dirname(path)
-            if os.path.basename(parent).startswith("ojo_suffix_"):
-                try:  # remove the per-app base dir once it empties
-                    os.rmdir(parent)
-                except OSError:
-                    pass
-
-
-# Normal process exit reaps this process's stage dirs even when no
-# teardown fixture ran (bench.py, ad-hoc scripts, the driver harness).
-atexit.register(clear_cache)

@@ -262,35 +262,24 @@ def streaming_unconverted_clicks_q(spark: SparkSession, sf_dir: str) -> DataFram
 
 # ---------------------------------------------------------------- C229
 
-_STREAM_MH_DIRS: set[str] = set()
-
-
 def _stream_mh_work_dir(spark: SparkSession, sf_dir: str) -> str:
     """Deterministic per-(application, sf_dir) work dir for the C229
-    drain, like operators/suffix.py's stage dirs (ADVICE r4: the old
-    mkdtemp-per-invocation leaked a full landing+index+matches+ckpt
-    tree every bench pass). A repeat invocation wipes and rebuilds the
-    ONE dir (the file-source checkpoint binds to specific part-file
-    names, so a stale checkpoint over rewritten landing files would
-    re-emit matches into fresh batch dirs); atexit reaps the last."""
-    import atexit
+    drain, under operators/stagecache.py's per-app dir so its one
+    reaper (clear_cache at exit, TTL sweep after a crash) covers it
+    (ADVICE r4: the old mkdtemp-per-invocation leaked a full
+    landing+index+matches+ckpt tree every bench pass). A repeat
+    invocation wipes and rebuilds the ONE dir (the file-source
+    checkpoint binds to specific part-file names, so a stale checkpoint
+    over rewritten landing files would re-emit matches into fresh batch
+    dirs)."""
     import hashlib
-    import os
     import shutil
-    import tempfile
 
-    app = spark.sparkContext.applicationId
+    from ..operators.stagecache import work_dir
+
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    work = os.path.join(tempfile.gettempdir(), f"ojo_stream_mh_{app}_{tag}")
+    work = work_dir(spark, f"stream_mh_{tag}")
     shutil.rmtree(work, ignore_errors=True)
-    if not _STREAM_MH_DIRS:
-        atexit.register(
-            lambda: [
-                shutil.rmtree(d, ignore_errors=True)
-                for d in list(_STREAM_MH_DIRS)
-            ]
-        )
-    _STREAM_MH_DIRS.add(work)
     return work
 
 

@@ -10,7 +10,6 @@ brute-force as the exact small-scale oracle, SRP-LSH bucketing as the
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -437,9 +436,9 @@ IVF_K_MIN = 4     # codebook floor (tiny test corpora)
 # √n growth is cut off at n = IVF_K_MAX² ≈ 1.7e7. The price past the
 # cutoff is cell size growing as n/K_MAX instead of √n (more rerank
 # work per probe, recall unaffected); a deployment that prefers bigger
-# codebooks on a bigger driver raises SPARK_GRAFT_IVF_K_MAX — the
-# memory ceiling then moves with the knob, never with the data.
-IVF_K_MAX = int(os.environ.get("SPARK_GRAFT_IVF_K_MAX", "4096"))
+# codebooks on a bigger driver raises this constant — the memory
+# ceiling then moves with the code, never with the data.
+IVF_K_MAX = 4096
 IVF_ITERS = 2     # fixed Lloyd iterations — deterministic, no RNG
 
 

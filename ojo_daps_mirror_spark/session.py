@@ -38,10 +38,10 @@ def get_spark(
         # oversized ones stay SMJ (and AQE skew-split still applies to
         # both). 64 MiB matches autoBroadcastJoinThreshold: a build the
         # planner would happily broadcast is equally safe to hash
-        # per-task. Override (or disable with 0) via env.
+        # per-task.
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", str(64 * 1024 * 1024)),
+            str(64 * 1024 * 1024),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

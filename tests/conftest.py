@@ -14,15 +14,11 @@ def spark():
 
     spark = get_spark(app_name="ojo-tests", shuffle_partitions=8)
     yield spark
-    # Reap the materialized stage dirs this session wrote (ADVICE r4:
-    # clear_cache must be wired into session teardown).
-    from ojo_daps_mirror_spark.operators.stagecache import (
-        clear_cache as clear_stagecache,
-    )
-    from ojo_daps_mirror_spark.operators.suffix import clear_cache
+    # Reap the materialized stage and work dirs this session wrote
+    # (ADVICE r4: clear_cache must be wired into session teardown).
+    from ojo_daps_mirror_spark.operators.stagecache import clear_cache
 
     clear_cache(spark)
-    clear_stagecache(spark)
 
 
 @pytest.fixture(scope="session")

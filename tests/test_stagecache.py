@@ -1,7 +1,6 @@
-"""Contract of the generic multi-part stage cache
-(operators/stagecache.py) and its consensus-family instantiation.
-
-Mirrors tests/test_suffix_gc.py — the hardening is shared by design:
+"""Contract of the materialized stage cache (operators/stagecache.py)
+and its consensus-family instantiation. Every stage family — the
+suffix sort included — shares this code, so these tests cover them all:
 
 - per-app tempdir layout: orphaned ``ojo_stage_*`` dirs reaped by
   mtime TTL, liveness judged by the freshest mtime of dir-or-child.
@@ -126,21 +125,29 @@ def test_shared_dir_reaps_stale_tmp_keeps_fresh(spark, tmp_path, monkeypatch):
 
 
 def test_heartbeat_refreshes_stage_and_parent(spark, tmp_path, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_STAGE_CACHE_DIR", str(tmp_path / "lake3"))
-    stagecache.materialized_stage(spark, "tstfam3", 1, "k3", _builders(spark))
+    """A cache hit refreshes the stage dir AND the parent dir the sweep
+    reaps by, in both the shared-dir and the default per-app layout."""
     import hashlib
 
-    path = stagecache._stage_path(
-        spark.sparkContext.applicationId, "tstfam3", 1,
-        hashlib.md5(b"k3").hexdigest()[:12],
-    )
-    base = os.path.dirname(path)
-    _age(path, stagecache._STALE_TTL_SECS + 3600)
-    _age(base, stagecache._STALE_TTL_SECS + 3600)
-    stagecache.materialized_stage(spark, "tstfam3", 1, "k3", _builders(spark))
-    now = time.time()
-    assert now - os.path.getmtime(path) < 600
-    assert now - os.path.getmtime(base) < 600
+    app = spark.sparkContext.applicationId
+    for key, lake in (("k3", tmp_path / "lake3"), ("k3app", None)):
+        if lake is None:
+            monkeypatch.delenv("SPARK_GRAFT_STAGE_CACHE_DIR", raising=False)
+        else:
+            monkeypatch.setenv("SPARK_GRAFT_STAGE_CACHE_DIR", str(lake))
+        stagecache.materialized_stage(spark, "tstfam3", 1, key, _builders(spark))
+        path = stagecache._stage_path(
+            app, "tstfam3", 1, hashlib.md5(key.encode()).hexdigest()[:12]
+        )
+        base = os.path.dirname(path)
+        if lake is None:
+            assert os.path.basename(base) == f"ojo_stage_{app}"
+        _age(path, stagecache._STALE_TTL_SECS + 3600)
+        _age(base, stagecache._STALE_TTL_SECS + 3600)
+        stagecache.materialized_stage(spark, "tstfam3", 1, key, _builders(spark))
+        now = time.time()
+        assert now - os.path.getmtime(path) < 600, key
+        assert now - os.path.getmtime(base) < 600, key
 
 
 def test_input_fingerprint_tracks_data_changes(tmp_path):

@@ -399,6 +399,7 @@ def test_state_bound_minhash_probe_is_stateless(spark, sf_dir):
     """C229 foreachBatch probe: stream state is ONLY source offsets —
     zero stateOperators rows — and the signature store stays
     O(corpus index): the drain reads it, never appends to it."""
+    import hashlib
     import os
 
     from ojo_daps_mirror_spark import plans
@@ -410,10 +411,11 @@ def test_state_bound_minhash_probe_is_stateless(spark, sf_dir):
     st = stock.state_summary()
     assert st["rows"] == 0 and st["by_operator"] == {}, st
     # the signature store on disk is exactly the seeded corpus index
-    from ojo_daps_mirror_spark.plans import misc_plans
-    index_dirs = [d for d in misc_plans._STREAM_MH_DIRS if os.path.isdir(d)]
-    assert index_dirs, "work dir missing"
-    idx = spark.read.parquet(os.path.join(index_dirs[-1], "index"))
+    from ojo_daps_mirror_spark.operators.stagecache import work_dir
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    work = work_dir(spark, f"stream_mh_{tag}")
+    assert os.path.isdir(work), "work dir missing"
+    idx = spark.read.parquet(os.path.join(work, "index"))
     from pyspark.sql import functions as F
     from ojo_daps_mirror_spark.plans.llm_plans6 import PROBE_MOD, PROBE_REM
     from ojo_daps_mirror_spark.plans.text_plans import minhash_bands

@@ -1,16 +1,21 @@
-"""GC contract of the suffix-stage cache (operators/suffix.py).
+"""GC contract of the suffix-stage cache, end to end through
+``suffix.adjacent_suffixes``.
 
-Two storage layouts, two different owners:
+The suffix stage is the stagecache family ``suffix`` (one part,
+``stage``), so it inherits stagecache's two storage layouts:
 
-- per-app tempdir layout (default): ``_sweep_stale`` reaps orphaned
-  ``ojo_suffix_*`` dirs by mtime TTL. Liveness must consider the
-  FRESHEST mtime of the dir or any direct child — the in-process
-  heartbeat utimes the stage subdir, and a parent-only check would
-  reap a live long-running session's stage (ADVICE r6, medium).
-- shared-dir layout (``SPARK_GRAFT_SUFFIX_CACHE_DIR``): stages are
+- per-app tempdir layout (default): orphaned ``ojo_stage_*`` dirs are
+  reaped by mtime TTL. Liveness must consider the FRESHEST mtime of
+  the dir or any direct child — the in-process heartbeat utimes the
+  stage subdir, and a parent-only check would reap a live long-running
+  session's stage.
+- shared-dir layout (``SPARK_GRAFT_STAGE_CACHE_DIR``): stages are
   published by atomic rename and reused read-if-exists; crashed
   writers leave ``*.__tmp_<app>`` debris that the NEXT writer reaps
-  iff older than the stale TTL (VERDICT r6 next-round #7).
+  iff older than the stale TTL.
+
+tests/test_stagecache.py checks the same rules on a synthetic family;
+these tests check that the suffix stage really goes through them.
 """
 
 from __future__ import annotations
@@ -18,12 +23,34 @@ from __future__ import annotations
 import os
 import time
 
-from ojo_daps_mirror_spark.operators import suffix
+from ojo_daps_mirror_spark.operators import stagecache, suffix
 
 
 def _age(path: str, secs: float) -> None:
     t = time.time() - secs
     os.utime(path, (t, t))
+
+
+def _cache_key(df) -> tuple:
+    """The stagecache entry whose ``stage`` part is ``df``."""
+    return next(
+        k
+        for k, parts in stagecache._CACHE.items()
+        if k[1] == "suffix" and parts["stage"] is df
+    )
+
+
+def _stage_dir(df) -> str:
+    """The published stage dir ``df`` reads from."""
+    app, family, version, tag = _cache_key(df)
+    assert family == "suffix" and version == suffix._STAGE_VERSION
+    return stagecache._stage_path(app, family, version, tag)
+
+
+def _drop_cached(df) -> None:
+    """Forget ``df``'s in-process cache entry, as a new process would."""
+    for part in stagecache._CACHE.pop(_cache_key(df)).values():
+        part.unpersist()
 
 
 def test_sweep_spares_dir_with_fresh_child(tmp_path, monkeypatch):
@@ -33,23 +60,24 @@ def test_sweep_spares_dir_with_fresh_child(tmp_path, monkeypatch):
     root.mkdir()
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(root))
 
-    old = suffix._STALE_TTL_SECS + 3600
+    old = stagecache._STALE_TTL_SECS + 3600
+    stage = f"suffix_v{suffix._STAGE_VERSION}"
 
     # dead app: base dir AND stage child both past the TTL -> reaped
-    dead = root / "ojo_suffix_deadapp"
-    (dead / "cap8_s1_v2_x").mkdir(parents=True)
-    _age(str(dead / "cap8_s1_v2_x"), old)
+    dead = root / "ojo_stage_deadapp"
+    (dead / f"{stage}_x").mkdir(parents=True)
+    _age(str(dead / f"{stage}_x"), old)
     _age(str(dead), old)
 
     # live app: base dir mtime is stale (nothing recreated a child in
     # 48h) but the heartbeat kept the stage subdir fresh -> survives
-    live = root / "ojo_suffix_liveapp"
-    (live / "cap8_s1_v2_y").mkdir(parents=True)
+    live = root / "ojo_stage_liveapp"
+    (live / f"{stage}_y").mkdir(parents=True)
     _age(str(live), old)  # child stays fresh
 
-    monkeypatch.setattr(suffix, "_swept", False)
-    monkeypatch.setattr(suffix, "_DIRS", set())
-    suffix._sweep_stale()
+    monkeypatch.setattr(stagecache, "_swept", False)
+    monkeypatch.setattr(stagecache, "_DIRS", set())
+    stagecache._sweep_stale()
 
     assert not dead.exists(), "stale dir with stale children must be reaped"
     assert live.exists(), "fresh child heartbeat must keep the dir alive"
@@ -57,15 +85,19 @@ def test_sweep_spares_dir_with_fresh_child(tmp_path, monkeypatch):
 
 def test_heartbeat_refreshes_parent_dir(spark, sf_dir, monkeypatch):
     """The cache-hit heartbeat must refresh the per-app BASE dir the
-    sweep reaps by, not only the stage subdir (ADVICE r6)."""
+    sweep reaps by, not only the stage subdir."""
+    monkeypatch.delenv("SPARK_GRAFT_STAGE_CACHE_DIR", raising=False)
     df = suffix.adjacent_suffixes(spark, sf_dir, cap=8)
     assert df.count() > 0
     app = spark.sparkContext.applicationId
-    stage = suffix._stage_path(app, sf_dir, 8, 1)
+    stage = _stage_dir(df)
     base = os.path.dirname(stage)
-    assert os.path.basename(base).startswith("ojo_suffix_")
-    _age(base, suffix._STALE_TTL_SECS + 3600)
-    _age(stage, suffix._STALE_TTL_SECS + 3600)
+    assert os.path.basename(base) == f"ojo_stage_{app}"
+    assert os.path.basename(stage).startswith(
+        f"suffix_v{suffix._STAGE_VERSION}_"
+    )
+    _age(base, stagecache._STALE_TTL_SECS + 3600)
+    _age(stage, stagecache._STALE_TTL_SECS + 3600)
     suffix.adjacent_suffixes(spark, sf_dir, cap=8)  # cache hit -> heartbeat
     now = time.time()
     assert now - os.path.getmtime(stage) < 600
@@ -77,61 +109,39 @@ def test_shared_dir_reaps_stale_tmp_and_reuses_published(
 ):
     shared = tmp_path / "lake"
     shared.mkdir()
-    monkeypatch.setenv("SPARK_GRAFT_SUFFIX_CACHE_DIR", str(shared))
-    # a fresh key tuple (unique cap) so the in-process cache misses
+    monkeypatch.setenv("SPARK_GRAFT_STAGE_CACHE_DIR", str(shared))
+    # a fresh key (unique cap) so the in-process cache misses
     cap = 9
-    app = spark.sparkContext.applicationId
-    path = suffix._stage_path(app, sf_dir, cap, 1)
 
     # crashed-writer debris: one stale (reap), one fresh (keep — its
     # writer may still be alive between tmp write and rename)
-    stale_tmp = f"{path}.__tmp_deadapp"
-    fresh_tmp = f"{path}.__tmp_otherapp"
+    debris = shared / f"suffix_v{suffix._STAGE_VERSION}_0123456789ab"
+    stale_tmp = f"{debris}.__tmp_deadapp"
+    fresh_tmp = f"{debris}.__tmp_otherapp"
     os.makedirs(stale_tmp)
     os.makedirs(fresh_tmp)
-    _age(stale_tmp, suffix._STALE_TTL_SECS + 3600)
+    _age(stale_tmp, stagecache._STALE_TTL_SECS + 3600)
 
     df = suffix.adjacent_suffixes(spark, sf_dir, cap=cap)
     n = df.count()
     assert n > 0
+    path = _stage_dir(df)
+    assert os.path.dirname(path) == str(shared)
     assert not os.path.exists(stale_tmp), "stale __tmp_ debris must be reaped"
     assert os.path.exists(fresh_tmp), "fresh __tmp_ dir must survive"
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    assert os.path.exists(os.path.join(path, "_STAGE_OK"))
 
     # read-if-exists: a second build of the same key from a fresh
     # process must NOT rewrite the published stage
-    published_mtime = os.path.getmtime(os.path.join(path, "_SUCCESS"))
-    key = (app, sf_dir, cap, 1)
-    suffix._CACHE.pop(key).unpersist()  # simulate a new process
+    published_mtime = os.path.getmtime(os.path.join(path, "_STAGE_OK"))
+    _drop_cached(df)
     df2 = suffix.adjacent_suffixes(spark, sf_dir, cap=cap)
     assert df2.count() == n
     assert (
-        os.path.getmtime(os.path.join(path, "_SUCCESS")) == published_mtime
+        os.path.getmtime(os.path.join(path, "_STAGE_OK")) == published_mtime
     ), "published stage must be reused read-if-exists, not rewritten"
 
     # shared-dir stages are the operator's to GC — never in _DIRS
-    assert path not in suffix._DIRS
-    suffix._CACHE.pop(key).unpersist()
-
-
-def test_stage_nlcp_is_successor_lcp(spark, sf_dir):
-    """v3 stage contract: ``nlcp`` on every row equals the sort-
-    SUCCESSOR's ``lcp`` (LCP is symmetric), NULL on the global last
-    row — the column the ExactSubstr consumers read instead of
-    re-aggregating neighbour contributions per query."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    df = suffix.adjacent_suffixes(spark, sf_dir, cap=8)
-    w = Window.orderBy("suf", "doc_id", "p")
-    chk = df.select(
-        "doc_id", "p", "lcp", "nlcp",
-        F.lead("lcp").over(w).alias("succ_lcp"),
-    )
-    bad = chk.where(
-        ~(
-            (F.col("nlcp").isNull() & F.col("succ_lcp").isNull())
-            | (F.col("nlcp") == F.col("succ_lcp"))
-        )
-    ).count()
-    assert bad == 0
+    assert str(shared) not in stagecache._DIRS
+    assert path not in stagecache._DIRS
+    _drop_cached(df2)
