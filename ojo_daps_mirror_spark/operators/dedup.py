@@ -11,16 +11,22 @@ exemplar as duplicate (identify_duplicates).
 A networkx graph on one machine dies at 100 TB. Here components are
 computed distributed, by iterative min-label propagation over the edge
 DataFrame: every vertex repeatedly adopts the smallest label among
-itself and its neighbours. Converges in O(component diameter) rounds,
-each one shuffle; lineage is cut with localCheckpoint so the loop's
-plan doesn't grow. Duplicate-description components are overwhelmingly
-tiny cliques/chains, so diameter — and the round count — stays small
-even at full scale.
+itself and its neighbours. The loop is ``lineage.fixpoint``: each
+round's labels are materialized by ``cut_lineage`` (a reliable
+checkpoint when the session has a checkpoint dir, a local one
+otherwise), and the count of labels that changed rides that same job,
+so a round costs one aggregate shuffle and no extra count job. There
+is no round cap: labels only decrease, so the loop ends after the
+first round in which none changed — O(component diameter) rounds.
+Duplicate-description components are overwhelmingly tiny
+cliques/chains, so diameter — and the round count — stays small even
+at full scale; a long chain (an ad reposted N times gives an N-vertex
+chain) just takes more rounds, never a wrong answer.
 """
 
 from __future__ import annotations
 
-from .lineage import cut_lineage
+from .lineage import cut_lineage, fixpoint
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -66,7 +72,6 @@ def connected_components(
     edges: DataFrame,
     vertices: DataFrame,
     id_col: str = "id",
-    max_iterations: int = 25,
 ) -> DataFrame:
     """Distributed connected components by min-label propagation.
 
@@ -91,7 +96,9 @@ def connected_components(
     labels = sym.select(F.col("src").alias("vid")).distinct().select(
         "vid", F.col("vid").alias("component_id")
     )
-    for _ in range(max_iterations):
+
+    def step(labels: DataFrame) -> DataFrame:
+        labels = labels.select("vid", "component_id")
         # Neighbour labels: for each dst, the min label among its sources.
         neighbour_min = (
             sym.join(labels, sym.src == labels.vid)
@@ -105,12 +112,12 @@ def connected_components(
         )
         # least(own label, neighbour min) as ONE union + min aggregate —
         # not a left join (two shuffled sides per round) — and the old
-        # label rides the same aggregate, so the convergence check below
-        # is a scan of the materialized frame instead of a second
+        # label rides the same aggregate, so the changed count is a
+        # column comparison observed on the cut's own job, not a
         # new⋈old join per round. Every vid appears exactly once with
         # own=true (neighbour dsts are a subset of the label vids), so
         # max(own label) IS the previous label.
-        new_labels = (
+        return (
             labels.select("vid", "component_id", F.lit(True).alias("own"))
             .unionByName(neighbour_min)
             .groupBy("vid")
@@ -120,16 +127,11 @@ def connected_components(
                     "__old__"
                 ),
             )
-            .transform(cut_lineage)  # cut lineage; loop plan stays flat
         )
-        changed = (
-            new_labels.where(F.col("component_id") != F.col("__old__"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels.select("vid", "component_id")
-        if changed == 0:
-            break
+
+    labels = fixpoint(
+        step, labels, changed=F.col("component_id") != F.col("__old__")
+    )
     return (
         vertices.select(F.col(id_col).alias("vid"))
         .join(labels, "vid", "left")  # AQE broadcasts when labels is small

@@ -56,7 +56,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-_CACHE: dict[tuple, dict[str, DataFrame]] = {}
+_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
 _DIRS: set[str] = set()
 _STALE_TTL_SECS = 48 * 3600
 _swept = False
@@ -167,9 +167,11 @@ def materialized_stage(
     """
     app_id = spark.sparkContext.applicationId
     tag = hashlib.md5(key.encode()).hexdigest()[:12]
-    cache_key = (app_id, family, version, tag)
-    hit = _CACHE.get(cache_key)
     path = _stage_path(app_id, family, version, tag)
+    # Keyed on the resolved path, so a changed stage base dir builds
+    # (or reads) the stage there instead of serving the old dir's.
+    cache_key = (app_id, path)
+    hit = _CACHE.get(cache_key)
     if hit is not None:
         # Heartbeat for the cross-process stale sweep (stage dir AND
         # its parent — the sweep reaps at the parent level), plus the

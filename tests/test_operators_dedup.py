@@ -18,10 +18,18 @@ def _cc(spark, edge_pairs, vertex_ids):
 
 
 def test_long_chain_collapses_to_min(spark):
-    # 0-1-2-...-9 chained: diameter 9, all must land on component 0
-    edges = [(i, i + 1) for i in range(9)]
-    out = _cc(spark, edges, range(10))
-    assert out == {i: 0 for i in range(10)}
+    # 0-1-...-(n-1) chained: diameter n-1, all must land on component 0.
+    # n=30 is what chain_edges emits for an ad reposted 30 times; the
+    # loop has no round cap, so the far end still reaches 0.
+    for n in (10, 30):
+        edges = [(i, i + 1) for i in range(n - 1)]
+        out = _cc(spark, edges, range(n))
+        assert out == {i: 0 for i in range(n)}, n
+
+
+def test_empty_edge_list_keeps_every_vertex_alone(spark):
+    out = _cc(spark, [], [3, 1, 7])
+    assert out == {1: 1, 3: 3, 7: 7}
 
 
 def test_disjoint_components_and_isolates(spark):

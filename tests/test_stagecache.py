@@ -64,7 +64,7 @@ def test_build_read_back_and_persist_reassert(spark, tmp_path, monkeypatch):
 
     # read-if-exists: published stage is never rewritten
     mt = os.path.getmtime(os.path.join(path, "_STAGE_OK"))
-    key = next(k for k in stagecache._CACHE if k[1] == "tstfam")
+    key = (spark.sparkContext.applicationId, path)
     for df in stagecache._CACHE.pop(key).values():  # simulate new process
         df.unpersist()
     parts3 = stagecache.materialized_stage(
@@ -148,6 +148,28 @@ def test_heartbeat_refreshes_stage_and_parent(spark, tmp_path, monkeypatch):
         now = time.time()
         assert now - os.path.getmtime(path) < 600, key
         assert now - os.path.getmtime(base) < 600, key
+
+
+def test_changed_base_dir_builds_under_new_dir(spark, tmp_path, monkeypatch):
+    """The in-process handle is keyed on the resolved stage path: once
+    SPARK_GRAFT_STAGE_CACHE_DIR changes, the same stage key is built
+    under the new dir instead of serving the old dir's handle."""
+    import hashlib
+
+    monkeypatch.delenv("SPARK_GRAFT_STAGE_CACHE_DIR", raising=False)
+    stagecache.materialized_stage(spark, "tstfam4", 1, "k4", _builders(spark))
+    lake = tmp_path / "lake4"
+    monkeypatch.setenv("SPARK_GRAFT_STAGE_CACHE_DIR", str(lake))
+    parts = stagecache.materialized_stage(
+        spark, "tstfam4", 1, "k4", _builders(spark)
+    )
+    path = stagecache._stage_path(
+        spark.sparkContext.applicationId, "tstfam4", 1,
+        hashlib.md5(b"k4").hexdigest()[:12],
+    )
+    assert path.startswith(str(lake))
+    assert os.path.exists(os.path.join(path, "_STAGE_OK"))
+    assert parts["derived"].collect()[0]["sx"] == 90
 
 
 def test_input_fingerprint_tracks_data_changes(tmp_path):

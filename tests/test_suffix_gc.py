@@ -32,19 +32,21 @@ def _age(path: str, secs: float) -> None:
 
 
 def _cache_key(df) -> tuple:
-    """The stagecache entry whose ``stage`` part is ``df``."""
+    """The stagecache entry (app id, stage path) whose ``stage`` part
+    is ``df``."""
     return next(
         k
         for k, parts in stagecache._CACHE.items()
-        if k[1] == "suffix" and parts["stage"] is df
+        if os.path.basename(k[1]).startswith("suffix_v")
+        and parts.get("stage") is df
     )
 
 
 def _stage_dir(df) -> str:
     """The published stage dir ``df`` reads from."""
-    app, family, version, tag = _cache_key(df)
-    assert family == "suffix" and version == suffix._STAGE_VERSION
-    return stagecache._stage_path(app, family, version, tag)
+    path = _cache_key(df)[1]
+    assert os.path.basename(path).startswith(f"suffix_v{suffix._STAGE_VERSION}_")
+    return path
 
 
 def _drop_cached(df) -> None:
