@@ -33,7 +33,7 @@ from pyspark.sql.window import Window
 
 from ..functions.rounding import round_eps
 from ..functions.text import STOPWORDS, hash64, sql_hash64, sql_tokens, tokens
-from ..functions.vectors import sql_cosine
+from ..functions.vectors import cosine_pairs, sql_cosine
 from ..operators.attach import scalars
 from ..sources import load_table
 from . import register
@@ -422,23 +422,15 @@ def near_dup_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id since testdata embeddings carry no timestamp), then the
     within-window all-pairs scan runs as BLOCK-PAIR tasks: rows hash
     to B blocks (B from estimated corpus volume; 1 at every provided
-    SF), each unordered block pair (p1 ≤ p2) is one applyInPandas
-    task, and a pair of vectors meets in exactly ONE task. The O(m²)
+    SF), each unordered block pair (bx ≤ by) is one applyInPandas
+    task (functions/vectors.py:cosine_pairs), and a pair of vectors
+    meets in exactly ONE task. The O(m²)
     work per window is the exact-scan contract, but the 16x audit
     showed one-task-per-window serialises it onto one core as windows
     fatten (49.7 s at 16x); block pairs spread the same work over
     B(B+1)/2 tasks per window (shuffle grows ×B — embeddings are
     narrow) and the wall-clock follows the cluster, not the window.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     n_blocks = _window_blocks(sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     windows = spark.createDataFrame(
@@ -449,75 +441,12 @@ def near_dup_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "w INT, lo INT, hi INT",
     )
     day = F.col("vec_id") % HORIZON_DAYS
-    assigned = (
-        emb.join(
-            F.broadcast(windows), (day >= F.col("lo")) & (day <= F.col("hi"))
-        )
-        .select(
-            "w",
-            (F.col("vec_id") % n_blocks).cast("int").alias("g"),
-            "vec_id",
-            "embedding",
-        )
-        # each row meets every other block once: explode to the
-        # unordered block pairs containing its own block
-        .withColumn(
-            "bp",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {n_blocks - 1}),"
-                    " h -> struct(least(g, h) AS p1, greatest(g, h) AS p2))"
-                )
-            ),
-        )
-        .select("w", F.col("bp.p1").alias("p1"), F.col("bp.p2").alias("p2"),
-                "g", "vec_id", "embedding")
-    )
-
-    out_schema = StructType(
-        [
-            StructField("id_a", LongType()),
-            StructField("id_b", LongType()),
-            StructField("cos_sim", DoubleType()),
-        ]
-    )
-
-    def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []})
-        p1, p2 = int(pdf["p1"].iloc[0]), int(pdf["p2"].iloc[0])
-        ids = pdf["vec_id"].to_numpy()
-        M = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        M /= np.linalg.norm(M, axis=1, keepdims=True)
-        g = pdf["g"].to_numpy()
-        if p1 == p2:
-            sims = M @ M.T
-            ai, bi = np.nonzero(sims >= WINDOWED_COS)
-            keep = ids[ai] < ids[bi]
-            sv = sims[ai, bi][keep]
-            ia, ib = ids[ai][keep], ids[bi][keep]
-        else:
-            a_idx = np.nonzero(g == p1)[0]
-            b_idx = np.nonzero(g == p2)[0]
-            if len(a_idx) == 0 or len(b_idx) == 0:
-                return empty
-            sims = M[a_idx] @ M[b_idx].T
-            ai, bi = np.nonzero(sims >= WINDOWED_COS)
-            if len(ai) == 0:
-                return empty
-            sv = sims[ai, bi]
-            xa, xb = ids[a_idx][ai], ids[b_idx][bi]
-            ia, ib = np.minimum(xa, xb), np.maximum(xa, xb)
-        return pd.DataFrame(
-            {
-                "id_a": ia,
-                "id_b": ib,
-                "cos_sim": np.floor((sv + 1e-9) * 1e4 + 0.5) / 1e4,
-            }
-        )
-
+    assigned = emb.join(
+        F.broadcast(windows), (day >= F.col("lo")) & (day <= F.col("hi"))
+    ).select("w", "vec_id", "embedding")
+    # a pair sharing both of its windows comes out of each: dedup
     return (
-        assigned.groupBy("w", "p1", "p2")
-        .applyInPandas(block_pairs, schema=out_schema)
+        cosine_pairs(assigned, n_blocks, WINDOWED_COS, keys=("w",))
         .dropDuplicates(["id_a", "id_b"])
         .orderBy("id_a", "id_b")
     )

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.rounding import round_eps, sql_round
-from ..functions.vectors import cosine, sql_cosine
+from ..functions.vectors import block_pairs, sql_cosine, top_k, unit_rows
 from ..operators.suffix import adjacent_suffixes
 from ..sources import load_table
 from . import register
@@ -328,16 +328,16 @@ def hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     counting their verified top-k edges instead — the audit
     composes, the quadratic scan does not.
     """
-    # near_dup_cosine's block-pair BLAS design (vector_plans.py:58)
-    # instead of the row-expression n^2 join: the corpus splits into
-    # NB hash blocks, every vector replicates to its NB unordered
-    # block-pairs, one shuffle groups each (bx, by) into a task that
-    # runs ONE normalised matmul and emits each query's BLOCK-LOCAL
-    # top-{HUB_K} (argmax merge is closed, so the global window over
-    # n*NB*{HUB_K} candidate rows recovers the exact global top-k).
-    # The interpreted zip_with/aggregate cosine per pair (64 struct
-    # allocations x n^2 pairs) measured 85 s at sf0.1; no driver-side
-    # corpus collect, no broadcast that grows with the corpus.
+    # near_dup_cosine's block-pair BLAS design instead of the
+    # row-expression n^2 join: every vector replicates to its NB
+    # unordered block pairs (functions/vectors.py:block_pairs), and
+    # each (bx, by) task runs ONE normalised matmul per direction and
+    # emits each query's BLOCK-LOCAL top-{HUB_K} (vectors.top_k; top-k
+    # is merge-closed, so the global window over n*NB*{HUB_K}
+    # candidate rows recovers the exact global top-k). The interpreted
+    # zip_with/aggregate cosine per pair (64 struct allocations x n^2
+    # pairs) measured 85 s at sf0.1; no driver-side corpus collect, no
+    # broadcast that grows with the corpus.
     import numpy as np
     import pandas as pd
 
@@ -348,55 +348,21 @@ def hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_vec = emb.count()  # parquet row-count metadata; no data scan
     nb = max(1, -(-n_vec // BLOCK_TARGET))
-    blk = F.pmod(F.col("vec_id"), F.lit(nb)).cast("int")
-    j = F.explode(F.sequence(F.lit(0), F.lit(nb - 1))).alias("j")
-    rep = emb.select("vec_id", "embedding", blk.alias("blk"), j).select(
-        "vec_id",
-        "embedding",
-        "blk",
-        F.least("blk", "j").alias("bx"),
-        F.greatest("blk", "j").alias("by"),
-    )
 
-    def block_topk(key, pdf):
-        bx, by = key
+    def block_topk(pdf):
         ids = pdf["vec_id"].to_numpy()
-        M = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        # A zero-norm embedding must not divide to NaN (r7 ADVICE): the
-        # zero vector's cosines stay 0.0, which the desc ordering places
-        # last — matching the NULL-last placement of the old Catalyst
-        # cosine expression.
-        nrm = np.linalg.norm(M, axis=1, keepdims=True)
-        M /= np.where(nrm == 0.0, 1.0, nrm)
-        out_q, out_t, out_c = [], [], []
+        M = unit_rows(np.stack(pdf["embedding"].to_numpy()))
+        bx, by = int(pdf["bx"].iloc[0]), int(pdf["by"].iloc[0])
+        a = pdf["blk"].to_numpy() == bx
+        sides = [(a, a)] if bx == by else [(a, ~a), (~a, a)]
+        parts = [top_k(M[qm], ids[qm], M[tm], ids[tm], HUB_K) for qm, tm in sides]
+        q, t, cos = (np.concatenate(c) for c in zip(*parts))
+        return pd.DataFrame({"q": q, "t": t, "cos": cos})
 
-        def emit(qm, tm):
-            qa, tb = ids[qm], ids[tm]
-            sims = M[qm] @ M[tm].T
-            for r in range(len(qa)):
-                row = sims[r]
-                idx = np.flatnonzero(tb != qa[r])
-                if idx.size == 0:
-                    continue
-                # exact (cos desc, id asc) block-local top-k; a full
-                # lexsort keeps exact-tie blocks (planted duplicates)
-                # correct where argpartition could split them
-                order = idx[np.lexsort((tb[idx], -row[idx]))[:HUB_K]]
-                out_q.extend([qa[r]] * len(order))
-                out_t.extend(tb[order])
-                out_c.extend(row[order])
-
-        if bx == by:
-            full = np.ones(len(ids), dtype=bool)
-            emit(full, full)
-        else:
-            am = pdf["blk"].to_numpy() == bx
-            emit(am, ~am)
-            emit(~am, am)
-        return pd.DataFrame({"q": out_q, "t": out_t, "cos": out_c})
-
-    cand = rep.groupBy("bx", "by").applyInPandas(
-        block_topk, schema="q bigint, t bigint, cos double"
+    cand = (
+        block_pairs(emb, nb)
+        .groupBy("bx", "by")
+        .applyInPandas(block_topk, schema="q bigint, t bigint, cos double")
     )
     topk = (
         cand.select(

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.rounding import round_eps, sql_round
-from ..functions.vectors import sql_cosine
+from ..functions.vectors import sql_cosine, top_k, unit_rows
 from ..sources import load_table
 from . import register
 
@@ -228,29 +228,15 @@ def knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     queries = query_panel(emb, EVAL_MOD, k=EVAL_PANEL_K).collect()
     q_ids = np.array([r["vec_id"] for r in queries])
-    Q = np.stack([r["e"] for r in queries]).astype(np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+    Qn = unit_rows(np.stack([r["e"] for r in queries]))
     bc = spark.sparkContext.broadcast((q_ids, Qn))
 
     def block_topk(batches):
         qids, Qn_ = bc.value
         for batch in batches:
-            ids = batch["vec_id"].to_numpy()
-            X = np.stack(batch["e"].to_numpy()).astype(np.float64)
-            Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-            sims = Qn_ @ Xn.T
-            k = min(EVAL_K + 1, len(ids))
-            part = np.argpartition(-sims, k - 1, axis=1)[:, :k]
-            out_q, out_n, out_c = [], [], []
-            for qi in range(len(qids)):
-                for xi in part[qi]:
-                    if ids[xi] != qids[qi]:
-                        out_q.append(qids[qi])
-                        out_n.append(ids[xi])
-                        out_c.append(sims[qi, xi])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "cos": out_c}
-            )
+            Xn = unit_rows(np.stack(batch["e"].to_numpy()))
+            q, n, cos = top_k(Qn_, qids, Xn, batch["vec_id"].to_numpy(), EVAL_K)
+            yield pd.DataFrame({"query_id": q, "neighbor_id": n, "cos": cos})
 
     cand = emb.mapInPandas(
         block_topk, schema="query_id bigint, neighbor_id bigint, cos double"

@@ -414,17 +414,18 @@ grid AS (
                  AND c.mktsegment = t.mktsegment AND c.band = g.band
 ),
 cum AS (
-  SELECT nationkey, mktsegment, cn,
-         SUM(CAST(cc AS DOUBLE) / cn - CAST(gc AS DOUBLE) / gn)
-           OVER (PARTITION BY nationkey, mktsegment ORDER BY band
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS cdf_gap,
+  SELECT nationkey, mktsegment, cn, gn,
+         CAST(SUM(cc * gn - gc * cn)
+                OVER (PARTITION BY nationkey, mktsegment ORDER BY band
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+              AS BIGINT) AS num,
          band
   FROM grid
 ),
 emd AS (
   SELECT nationkey, mktsegment, MAX(cn) AS class_size,
-         SUM(ABS(cdf_gap)) / ({TC_BANDS} - 1) AS t_dist
+         CAST(SUM(ABS(num)) AS DOUBLE)
+           / CAST(MAX(cn) * MAX(gn) * ({TC_BANDS} - 1) AS DOUBLE) AS t_dist
   FROM cum WHERE band < {TC_BANDS - 1} + 1
   GROUP BY nationkey, mktsegment
 ),
@@ -456,8 +457,11 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the t = {TC_THRESHOLD} violation flag.
 
     Exactness: band assignment is the identical min-max integer
-    arithmetic; CDF gaps are ratios of exact integers accumulated in
-    identical order; one division.
+    arithmetic; each CDF gap is the exact integer numerator
+    cumsum(cc*gn - gc*cn) over cn*gn, so the distance is one division
+    of two exact integers, whatever order rows reach the sums in (a
+    double running sum made the ranking of near-equal classes depend
+    on that order).
 
     Scale shape: two grouped counts + a |classes| x {TC_BANDS} dense
     grid (zero-filled by construction) + one cumulative window per
@@ -517,22 +521,21 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nationkey",
         "mktsegment",
         "cn",
+        "gn",
         "band",
-        F.sum(
-            F.col("cc").cast("double") / F.col("cn")
-            - F.col("gc").cast("double") / F.col("gn")
-        )
+        F.sum(F.col("cc") * F.col("gn") - F.col("gc") * F.col("cn"))
         .over(w_cum)
-        .alias("cdf_gap"),
+        .alias("num"),
     )
     emd = (
         cum.where(F.col("band") < TC_BANDS)
         .groupBy("nationkey", "mktsegment")
         .agg(
             F.max("cn").alias("class_size"),
-            (F.sum(F.abs(F.col("cdf_gap"))) / (TC_BANDS - 1)).alias(
-                "t_dist"
-            ),
+            (
+                F.sum(F.abs(F.col("num"))).cast("double")
+                / (F.max("cn") * F.max("gn") * (TC_BANDS - 1)).cast("double")
+            ).alias("t_dist"),
         )
     )
     ranked = emd.select(

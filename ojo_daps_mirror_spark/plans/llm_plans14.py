@@ -14,7 +14,7 @@ from pyspark.sql.window import Window
 
 from ..functions.rounding import round_eps, sql_round
 from ..functions.text import hash64, sql_hash64, sql_tokens, tokens
-from ..functions.vectors import sql_cosine
+from ..functions.vectors import sql_cosine, top_k, unit_rows
 from ..operators.attach import scalars
 from ..sources import load_table
 from .vector_plans import QUERY_PANEL_K, query_panel
@@ -166,8 +166,7 @@ def contrastive_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchors = query_panel(emb, PAIR_MOD).collect()
     q_ids = np.array([r["vec_id"] for r in anchors])
     q_lab = np.array([r["label"] for r in anchors])
-    Q = np.stack([r["e"] for r in anchors]).astype(np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+    Qn = unit_rows(np.stack([r["e"] for r in anchors]))
     bc = spark.sparkContext.broadcast((q_ids, q_lab, Qn))
 
     def block_best(batches):
@@ -175,24 +174,16 @@ def contrastive_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         for batch in batches:
             ids = batch["vec_id"].to_numpy()
             lab = batch["label"].to_numpy()
-            X = np.stack(batch["e"].to_numpy()).astype(np.float64)
-            Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-            sims = Qn_ @ Xn.T  # |Q| x |batch|
-            out = {"query_id": [], "kind": [], "nid": [], "cos": []}
-            for qi in range(len(qids)):
-                not_self = ids != qids[qi]
-                for kind, m in (("pos", lab == qlab[qi]), ("neg", lab != qlab[qi])):
-                    mask = m & not_self
-                    if not mask.any():
-                        continue
-                    idx = np.flatnonzero(mask)
-                    # batch-local argmax with (cos desc, id asc) tie-break
-                    best = idx[np.lexsort((ids[idx], -sims[qi, idx]))[0]]
-                    out["query_id"].append(qids[qi])
-                    out["kind"].append(kind)
-                    out["nid"].append(ids[best])
-                    out["cos"].append(sims[qi, best])
-            yield pd.DataFrame(out)
+            Xn = unit_rows(np.stack(batch["e"].to_numpy()))
+            # batch-local (cos desc, id asc) best per anchor and kind,
+            # one top-1 per anchor label
+            for lb in np.unique(qlab):
+                qm = qlab == lb
+                for kind, xm in (("pos", lab == lb), ("neg", lab != lb)):
+                    q, n, cos = top_k(Qn_[qm], qids[qm], Xn[xm], ids[xm], 1)
+                    yield pd.DataFrame(
+                        {"query_id": q, "kind": kind, "nid": n, "cos": cos}
+                    )
 
     cand = emb.mapInPandas(
         block_best, schema="query_id bigint, kind string, nid bigint, cos double"

@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 
 from ..functions.rounding import round_eps, sql_round
 from ..functions.text import hash64, shingles, sql_hash64, sql_shingles, sql_tokens, tokens
+from ..functions.vectors import unit_rows
 from ..sources import load_table
 from . import register
 
@@ -212,13 +213,11 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # seed rule as ann_ivf's quantiser, without Lloyd refinement — the
     # cluster geometry only gates which pairs are COMPARED).
     seeds = emb.orderBy("vec_id").limit(semdedup_k).collect()
-    cent = np.stack([r["e"] for r in seeds])
-    cent = cent / np.linalg.norm(cent, axis=1, keepdims=True)
+    cent = unit_rows(np.stack([r["e"] for r in seeds]))
 
     def _assign(e: "pd.Series") -> "pd.Series":
-        M = np.stack(e.to_numpy()).astype(np.float64)
-        M = M / np.linalg.norm(M, axis=1, keepdims=True)
-        return pd.Series(np.argmax(M @ cent.T, axis=1).astype(np.int32))
+        sims = unit_rows(np.stack(e.to_numpy())) @ cent.T
+        return pd.Series(np.argmax(sims, axis=1).astype(np.int32))
 
     _assign.__annotations__ = {"e": pd.Series, "return": pd.Series}
     assign = pandas_udf(_assign, "int")
@@ -247,19 +246,19 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _greedy(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        M = np.stack(pdf["e"].to_numpy()).astype(np.float64)
-        M = M / np.linalg.norm(M, axis=1, keepdims=True)
+        M = unit_rows(np.stack(pdf["e"].to_numpy()))
+        nz = M.any(axis=1)  # a zero vector has no cosine: always kept
         kept: list[int] = []
         keep = np.zeros(len(pdf), dtype=bool)
         max_cos = np.full(len(pdf), np.nan)
         for j in range(len(pdf)):
-            if kept:
-                sims = M[kept] @ M[j]
-                max_cos[j] = float(sims.max())
+            if kept and nz[j]:
+                max_cos[j] = float((M[kept] @ M[j]).max())
                 if max_cos[j] >= SEMDEDUP_TAU:
                     continue
             keep[j] = True
-            kept.append(j)
+            if nz[j]:
+                kept.append(j)
         return pd.DataFrame(
             {
                 "vec_id": pdf["vec_id"],

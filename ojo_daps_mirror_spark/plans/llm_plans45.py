@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 
 from ..functions.rounding import round_eps, sql_round
 from ..functions.text import hash64, sql_hash64, sql_tokens, tokens
+from ..functions.vectors import top_k, unit_rows
 from ..operators.graph import HITS_ITERS, hits
 from ..sources import load_table
 from .vector_plans import QUERY_PANEL_K, query_panel
@@ -278,40 +279,20 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     queries = query_panel(emb, MRL_MOD).collect()
     q_ids = np.array([r["vec_id"] for r in queries])
-    Q = np.stack([r["e"] for r in queries]).astype(np.float64)
-    q_norm = {
-        d: Q[:, :d] / np.linalg.norm(Q[:, :d], axis=1, keepdims=True)
-        for d in MRL_DIMS
-    }
+    Q = np.stack([r["e"] for r in queries])
+    q_norm = {d: unit_rows(Q[:, :d]) for d in MRL_DIMS}
     bc = spark.sparkContext.broadcast((q_ids, q_norm))
 
     def block_topk(batches):
         qids, qn = bc.value
         for batch in batches:
             ids = batch["vec_id"].to_numpy()
-            X = np.stack(batch["e"].to_numpy()).astype(np.float64)
-            out_d, out_q, out_n, out_c = [], [], [], []
+            X = np.stack(batch["e"].to_numpy())
             for d, Qn_ in qn.items():
-                Xd = X[:, :d]
-                Xn = Xd / np.linalg.norm(Xd, axis=1, keepdims=True)
-                sims = Qn_ @ Xn.T
-                k = min(MRL_K + 1, len(ids))
-                part = np.argpartition(-sims, k - 1, axis=1)[:, :k]
-                for qi in range(len(qids)):
-                    for xi in part[qi]:
-                        if ids[xi] != qids[qi]:
-                            out_d.append(d)
-                            out_q.append(qids[qi])
-                            out_n.append(ids[xi])
-                            out_c.append(sims[qi, xi])
-            yield pd.DataFrame(
-                {
-                    "dim": out_d,
-                    "query_id": out_q,
-                    "nid": out_n,
-                    "cos": out_c,
-                }
-            )
+                q, n, cos = top_k(Qn_, qids, unit_rows(X[:, :d]), ids, MRL_K)
+                yield pd.DataFrame(
+                    {"dim": d, "query_id": q, "nid": n, "cos": cos}
+                )
 
     cand = emb.mapInPandas(
         block_topk, schema="dim int, query_id bigint, nid bigint, cos double"

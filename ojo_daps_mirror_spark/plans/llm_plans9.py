@@ -14,7 +14,7 @@ from pyspark.sql.window import Window
 
 from ..functions.rounding import round_eps, sql_round
 from ..functions.text import sql_tokens, tokens
-from ..functions.vectors import sql_cosine
+from ..functions.vectors import sql_cosine, top_k, unit_rows
 from ..operators.attach import scalars
 from ..sources import load_table
 from . import register
@@ -65,29 +65,15 @@ def ann_topk_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     queries = query_panel(emb, QUERY_MOD).collect()
     q_ids = np.array([r["vec_id"] for r in queries])
-    Q = np.stack([r["e"] for r in queries]).astype(np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+    Qn = unit_rows(np.stack([r["e"] for r in queries]))
     bc = spark.sparkContext.broadcast((q_ids, Qn))
 
     def block_topk(batches):
         qids, Qn_ = bc.value
         for batch in batches:
-            ids = batch["vec_id"].to_numpy()
-            X = np.stack(batch["e"].to_numpy()).astype(np.float64)
-            Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-            sims = Qn_ @ Xn.T  # |Q| x |batch|
-            k = min(ANN_K + 1, len(ids))  # +1: the query itself may be here
-            part = np.argpartition(-sims, k - 1, axis=1)[:, :k]
-            out_q, out_n, out_c = [], [], []
-            for qi in range(len(qids)):
-                for xi in part[qi]:
-                    if ids[xi] != qids[qi]:
-                        out_q.append(qids[qi])
-                        out_n.append(ids[xi])
-                        out_c.append(sims[qi, xi])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "cos": out_c}
-            )
+            Xn = unit_rows(np.stack(batch["e"].to_numpy()))
+            q, n, cos = top_k(Qn_, qids, Xn, batch["vec_id"].to_numpy(), ANN_K)
+            yield pd.DataFrame({"query_id": q, "neighbor_id": n, "cos": cos})
 
     cand = emb.mapInPandas(
         block_topk, schema="query_id bigint, neighbor_id bigint, cos double"

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.rounding import round_eps
-from ..functions.vectors import cosine, norm, sql_cosine
+from ..functions.vectors import cosine_pairs, norm, sql_cosine, unit_rows
 from ..operators.dedup import connected_components
 from ..sources import load_table
 from . import register
@@ -60,65 +60,16 @@ def near_dup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     (labs/deduplication/faiss_utils.py:find_similar_vectors made
     distributed).
 
-    Block-pair design — exact, with NO driver-side corpus collect: the
-    corpus splits into NB hash blocks; every vector is replicated to its
-    NB unordered block-pairs; one shuffle groups each (block_i, block_j)
-    pair into a task that runs a single BLAS matmul and emits only the
-    above-threshold pairs. Each unordered vector pair lands in exactly
-    one block-pair group, so the output needs no dedup. Shuffle volume
-    is NB × corpus (NB ≈ n / BLOCK_TARGET) — the unavoidable cost of an
-    EXACT all-pairs join; recall-tolerant pipelines use ann_lsh_bucketed
-    / ann_ivf candidates instead.
+    Block-pair design (functions/vectors.py:cosine_pairs) — exact, with
+    NO driver-side corpus collect: NB ≈ n / BLOCK_TARGET hash blocks,
+    one BLAS matmul per unordered block pair, above-threshold pairs
+    only. Recall-tolerant pipelines use ann_lsh_bucketed / ann_ivf
+    candidates instead.
     """
-    import numpy as np
-    import pandas as pd
-
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n = emb.count()  # parquet row-count metadata; no data scan
     nb = max(1, -(-n // BLOCK_TARGET))
-
-    blk = F.pmod(F.col("vec_id"), F.lit(nb)).cast("int")
-    # Vector in block i joins every unordered pair {i, j}: struct keys
-    # (min, max) so both blocks of a pair land in the same group.
-    j = F.explode(F.sequence(F.lit(0), F.lit(nb - 1))).alias("j")
-    rep = emb.select("vec_id", "embedding", blk.alias("blk"), j).select(
-        "vec_id",
-        "embedding",
-        "blk",
-        F.least("blk", "j").alias("bx"),
-        F.greatest("blk", "j").alias("by"),
-    )
-
-    def block_pair_sims(key, pdf):
-        bx, by = key
-        ids = pdf["vec_id"].to_numpy()
-        M = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        M /= np.linalg.norm(M, axis=1, keepdims=True)
-        if bx == by:
-            sims = M @ M.T
-            ai, bi = np.nonzero(sims >= NEAR_DUP_COS)
-            ia, ib, vals = ids[ai], ids[bi], sims[ai, bi]
-            keep = ia < ib  # symmetric matrix: take each pair once
-        else:
-            ablk = pdf["blk"].to_numpy() == bx
-            A, B = M[ablk], M[~ablk]
-            sims = A @ B.T
-            ai, bi = np.nonzero(sims >= NEAR_DUP_COS)
-            ia, ib, vals = ids[ablk][ai], ids[~ablk][bi], sims[ai, bi]
-            keep = ia != ib  # cross-block: every pair appears once
-        lo, hi = np.minimum(ia, ib)[keep], np.maximum(ia, ib)[keep]
-        return pd.DataFrame(
-            {
-                "id_a": lo,
-                "id_b": hi,
-                "cos_sim": np.floor((vals[keep] + 1e-9) * 1e4 + 0.5) / 1e4,
-            }
-        )
-
-    out = rep.groupBy("bx", "by").applyInPandas(
-        block_pair_sims, schema="id_a bigint, id_b bigint, cos_sim double"
-    )
-    return out.orderBy("id_a", "id_b")
+    return cosine_pairs(emb, nb, NEAR_DUP_COS).orderBy("id_a", "id_b")
 
 
 # ---------------------------------------------------------------- C8
@@ -493,12 +444,10 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-iteration update collect below are both ≤ K rows
 
     def assign_udf(centroids: "np.ndarray", n: int = 1):
-        C = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
+        C = unit_rows(centroids)
 
         def _assign(e: "pd.Series") -> "pd.Series":
-            M = np.stack(e.to_numpy()).astype(np.float64)
-            M = M / np.linalg.norm(M, axis=1, keepdims=True)
-            sims = M @ C.T
+            sims = unit_rows(np.stack(e.to_numpy())) @ C.T
             if n == 1:
                 return pd.Series(np.argmax(sims, axis=1).astype(np.int32))
             top = np.argsort(-sims, axis=1)[:, :n]
@@ -523,13 +472,12 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def partial_sums(batches):
             cb = cb_bc.value
-            C = cb / np.linalg.norm(cb, axis=1, keepdims=True)
+            C = unit_rows(cb)
             sums = np.zeros((cb.shape[0], dim))
             cnts = np.zeros(cb.shape[0], dtype=np.int64)
             for batch in batches:
                 M = np.stack(batch["e"].to_numpy()).astype(np.float64)
-                Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-                code = np.argmax(Mn @ C.T, axis=1)
+                code = np.argmax(unit_rows(M) @ C.T, axis=1)
                 np.add.at(sums, code, M)
                 np.add.at(cnts, code, 1)
             ix = np.nonzero(cnts)[0]

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,15 +67,19 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events table, ts normalised to timestamp.
 
     The file-stream source wants a directory to monitor; expose the
-    single parquet file through a temp-dir symlink (in production the
-    source is a real landing directory / Kafka topic). Replica builds
+    single parquet file through a symlink in a work dir under this
+    application's stagecache dir, so no other process shares it and
+    ``clear_cache`` reaps it (in production the source is a real
+    landing directory / Kafka topic). Replica builds
     (scripts/scale_stress.py) write events.parquet as a DIRECTORY of
     part files — those are linked individually, re-linked fresh each
     call because a rebuild renames every part.
     """
+    from ..operators.stagecache import work_dir
+
     src = os.path.abspath(f"{sf_dir}/events.parquet")
-    stream_dir = os.path.join(
-        tempfile.gettempdir(), f"ojo_stream_{hashlib.md5(src.encode()).hexdigest()[:8]}"
+    stream_dir = work_dir(
+        spark, f"stream_{hashlib.md5(src.encode()).hexdigest()[:8]}"
     )
     os.makedirs(stream_dir, exist_ok=True)
     if os.path.isdir(src) and not os.path.islink(src):
@@ -103,7 +106,9 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def run_to_completion(df: DataFrame, spark: SparkSession, mode: str = "complete"):
     """Start ``df`` as an availableNow memory-sink stream, await it, and
-    return the sink table (caller orders it)."""
+    return the sink's rows (caller orders it). The frame is resolved
+    before the sink's temp view is dropped, so no drain leaves a
+    catalog entry behind."""
     sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
     query = (
         df.writeStream.format("memory")
@@ -114,7 +119,9 @@ def run_to_completion(df: DataFrame, spark: SparkSession, mode: str = "complete"
     )
     query.awaitTermination()
     capture_progress(query)
-    return spark.table(sink)
+    out = spark.table(sink)
+    spark.catalog.dropTempView(sink)
+    return out
 
 
 def streaming_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
