@@ -24,9 +24,10 @@ assignment). It holds the only copy of each kernel:
 
 Zero-vector rule. A pair with a zero side has no cosine: DuckDB's
 ``dot / (norm * norm)`` (``sql_cosine``) gives NULL for it, and so does
-the Catalyst ``cosine`` with ANSI mode off (with it on, Spark raises
-DIVIDE_BY_ZERO instead). The numpy kernels follow the NULL rule, so
-such a pair
+the Catalyst ``cosine`` and every plan that divides ``dot`` by
+precomputed norms, as long as the divide is a ``try_divide`` (a plain
+``/`` raises DIVIDE_BY_ZERO under ANSI mode). The numpy kernels follow
+the NULL rule, so such a pair
 
 - never passes a threshold;
 - ranks after every real cosine, ties broken by id;
@@ -62,7 +63,7 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
 def l2_normalize(a: Column) -> Column:

@@ -9,24 +9,22 @@ singleton splits), and flags every member except a deterministic min-id
 exemplar as duplicate (identify_duplicates).
 
 A networkx graph on one machine dies at 100 TB. Here components are
-computed distributed, by iterative min-label propagation over the edge
-DataFrame: every vertex repeatedly adopts the smallest label among
-itself and its neighbours. The loop is ``lineage.fixpoint``: each
-round's labels are materialized by ``cut_lineage`` (a reliable
-checkpoint when the session has a checkpoint dir, a local one
-otherwise), and the count of labels that changed rides that same job,
-so a round costs one aggregate shuffle and no extra count job. There
-is no round cap: labels only decrease, so the loop ends after the
-first round in which none changed — O(component diameter) rounds.
-Duplicate-description components are overwhelmingly tiny
-cliques/chains, so diameter — and the round count — stays small even
-at full scale; a long chain (an ad reposted N times gives an N-vertex
-chain) just takes more rounds, never a wrong answer.
+computed distributed, by iterative min-label propagation over a state
+of one row per edge-incident vertex, ``(vid, nbrs, component_id,
+__old__)``. A round is one union of own rows with one message per
+neighbour and one aggregate on ``vid``: one shuffle of O(|E| + |V|)
+rows, no join. The loop is ``lineage.fixpoint``: each round is cut and
+its changed-label count rides the cut's job. Round 1 is closed-form in
+the uncut prologue, so the first cut runs rounds 1 and 2 and a call
+makes rounds - 1 cuts. Labels only decrease, so the loop ends at the
+first unchanged round, with no cap: O(component diameter) rounds.
+Duplicate components are mostly tiny cliques and chains; a long chain
+(an ad reposted N times) just takes more rounds, never a wrong answer.
 """
 
 from __future__ import annotations
 
-from .lineage import cut_lineage, fixpoint
+from .lineage import fixpoint
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -76,65 +74,55 @@ def connected_components(
     """Distributed connected components by min-label propagation.
 
     Returns (id_col, component_id) for every vertex; isolated vertices
-    are their own component. Replaces the reference's driver-side
-    ``networkx.connected_components``.
+    never change, so they stay out of the loop and are joined back as
+    their own component. Replaces the reference's driver-side
+    ``networkx.connected_components``. Edge endpoints missing from
+    ``vertices`` carry labels but are not in the output.
+
+    The prologue (symmetric edges grouped by ``vid`` into ``nbrs``,
+    with round 1's ``least(vid, array_min(nbrs))``) is not cut: its two
+    references in the first round share one exchange, so the upstream
+    edge pipeline runs once, inside ``fixpoint``'s first cut.
     """
-    sym = (
-        edges.selectExpr("first_id AS src", "second_id AS dst")
-        .union(edges.selectExpr("second_id AS src", "first_id AS dst"))
-        .distinct()
-        # Materialised once: the loop joins this every iteration, and
-        # without it the entire upstream edge pipeline (e.g. a full
-        # minhash-LSH pass) re-executes per round.
-        .transform(cut_lineage)
+    pair = F.explode(
+        F.array(F.array("first_id", "second_id"), F.array("second_id", "first_id"))
     )
-    # The loop only carries edge-incident vertices: isolated vertices are
-    # their own component and can never change, so keeping them in the
-    # iteration would shuffle the full vertex set every round. At corpus
-    # scale |V(edges)| ≪ |docs| (dup edges are sparse), so loop state is
-    # tiny; isolates are joined back once at the end.
-    labels = sym.select(F.col("src").alias("vid")).distinct().select(
-        "vid", F.col("vid").alias("component_id")
+    state = (
+        edges.select(pair.alias("e"))
+        .groupBy(F.col("e")[0].alias("vid"))
+        .agg(F.collect_set(F.col("e")[1]).alias("nbrs"))
+        .select(
+            "vid",
+            "nbrs",
+            F.least("vid", F.array_min("nbrs")).alias("component_id"),
+            F.col("vid").alias("__old__"),
+        )
     )
 
-    def step(labels: DataFrame) -> DataFrame:
-        labels = labels.select("vid", "component_id")
-        # Neighbour labels: for each dst, the min label among its sources.
-        neighbour_min = (
-            sym.join(labels, sym.src == labels.vid)
-            .groupBy("dst")
-            .agg(F.min("component_id").alias("component_id"))
-            .select(
-                F.col("dst").alias("vid"),
-                "component_id",
-                F.lit(False).alias("own"),
-            )
-        )
-        # least(own label, neighbour min) as ONE union + min aggregate —
-        # not a left join (two shuffled sides per round) — and the old
-        # label rides the same aggregate, so the changed count is a
-        # column comparison observed on the cut's own job, not a
-        # new⋈old join per round. Every vid appears exactly once with
-        # own=true (neighbour dsts are a subset of the label vids), so
-        # max(own label) IS the previous label.
+    def step(state: DataFrame) -> DataFrame:
+        # Own rows carry nbrs and the label as __old__; messages carry
+        # neither. Every message target has an own row (the edges are
+        # symmetric), so each group holds exactly one non-NULL nbrs and
+        # __old__, and max() picks it deterministically.
+        own = state.withColumn("__old__", F.col("component_id"))
+        msgs = state.select(F.explode("nbrs").alias("vid"), "component_id")
         return (
-            labels.select("vid", "component_id", F.lit(True).alias("own"))
-            .unionByName(neighbour_min)
+            own.unionByName(msgs, allowMissingColumns=True)
             .groupBy("vid")
             .agg(
+                F.max("nbrs").alias("nbrs"),
                 F.min("component_id").alias("component_id"),
-                F.max(F.when(F.col("own"), F.col("component_id"))).alias(
-                    "__old__"
-                ),
+                F.max("__old__").alias("__old__"),
             )
         )
 
     labels = fixpoint(
-        step, labels, changed=F.col("component_id") != F.col("__old__")
+        step, state, changed=F.col("component_id") != F.col("__old__")
     )
     return (
         vertices.select(F.col(id_col).alias("vid"))
-        .join(labels, "vid", "left")  # AQE broadcasts when labels is small
+        # AQE broadcasts when labels is small
+        .join(labels.select("vid", "component_id"), "vid", "left")
         .select(
             F.col("vid").alias(id_col),
             F.coalesce("component_id", "vid").alias("component_id"),

@@ -31,6 +31,9 @@ launches are its lineage cut's. It runs in one of two modes:
   ``step`` must be monotone (connected components' min-labels only
   decrease).
 
+``state`` may be a lazy prologue: the first cut then runs it with
+the first step (connected components folds its round 1 in this way).
+
 ``fixpoint`` calls ``cut_lineage`` through this module's global, so a
 wrapper installed on ``lineage.cut_lineage`` (perfbench's job
 tracing) sees every round.

@@ -22,8 +22,9 @@ Storage layouts and hardening:
 
 - default per-app layout: ``<tmp>/ojo_stage_<appId>/<family>_v<V>_<tag>``,
   reaped by ``clear_cache``/atexit on normal exit and by a 48 h
-  mtime-TTL sweep of orphaned ``ojo_stage_*`` dirs from crashed
-  processes (liveness = freshest mtime of the dir OR any child, so the
+  mtime-TTL sweep of orphaned ``ojo_stage_*`` (and legacy
+  ``ojo_suffix_*``/``ojo_stream_*``) dirs from crashed processes
+  (liveness = freshest mtime of the dir OR any child, so the
   in-process heartbeat keeps a live long session's stage safe). The
   same per-app dir hosts operators' scratch work dirs (``work_dir``),
   so one reaper covers every temp tree the package writes.
@@ -59,6 +60,8 @@ from pyspark.sql import DataFrame, SparkSession
 _CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
 _DIRS: set[str] = set()
 _STALE_TTL_SECS = 48 * 3600
+# per-app dirs, and the suffix/streaming dirs older code left in tmp
+_SWEPT_PREFIXES = ("ojo_stage_", "ojo_suffix_", "ojo_stream_")
 _swept = False
 
 Builder = Callable[[dict[str, DataFrame]], DataFrame]
@@ -90,7 +93,7 @@ def input_fingerprint(path: str) -> str:
 
 
 def _sweep_stale() -> None:
-    """Remove ojo_stage_* temp dirs whose owning app is long gone.
+    """Remove ``_SWEPT_PREFIXES`` temp dirs whose owning app is gone.
 
     A dir is live iff the freshest mtime of the dir or ANY direct child is
     within the TTL — the heartbeat utimes child stage dirs, and a
@@ -107,7 +110,7 @@ def _sweep_stale() -> None:
     except OSError:  # pragma: no cover - unreadable tempdir
         return
     for name in entries:
-        if not name.startswith("ojo_stage_"):
+        if not name.startswith(_SWEPT_PREFIXES):
             continue
         path = os.path.join(root, name)
         if path in _DIRS or any(d.startswith(path) for d in _DIRS):

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.rounding import round_eps
-from ..functions.vectors import cosine_pairs, norm, sql_cosine, unit_rows
+from ..functions.vectors import cosine_pairs, dot, norm, sql_cosine, unit_rows
 from ..operators.dedup import connected_components
 from ..sources import load_table
 from . import register
@@ -118,11 +118,11 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") % QUERY_MOD == 0)
         & (F.col("vec_id") < QUERY_MOD * QUERY_PANEL_K)
     )
-    from ..functions.vectors import dot
-
     q = queries.alias("q")
     v = emb.alias("v")
-    cos = dot(F.col("q.e"), F.col("v.e")) / (F.col("q.nrm") * F.col("v.nrm"))
+    cos = F.try_divide(
+        dot(F.col("q.e"), F.col("v.e")), F.col("q.nrm") * F.col("v.nrm")
+    )
     scored = (
         q.join(v, F.col("q.vec_id") != F.col("v.vec_id"))
         .select(
@@ -281,9 +281,7 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "neighbor_id",
     )
-    from ..functions.vectors import dot
-
-    cos = dot(F.col("qe"), F.col("ve")) / (F.col("qn") * F.col("vn"))
+    cos = F.try_divide(dot(F.col("qe"), F.col("ve")), F.col("qn") * F.col("vn"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
         cand.withColumn("cos", cos)
@@ -515,9 +513,7 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = queries.join(indexed, "cell").where(
         F.col("query_id") != F.col("vec_id")
     )
-    from ..functions.vectors import dot
-
-    cos = dot(F.col("qe"), F.col("e")) / (F.col("qn") * F.col("nrm"))
+    cos = F.try_divide(dot(F.col("qe"), F.col("e")), F.col("qn") * F.col("nrm"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
         cand.select(

@@ -4,7 +4,8 @@ the iterative graph operators:
 - until-converged mode stops after the first round whose observed
   changed count is 0; fixed-count mode runs exactly N rounds;
 - a round launches no Spark job beyond its lineage cut (the changed
-  count rides the cut's own job), connected components included;
+  count rides the cut's own job), connected components included, whose
+  first round runs uncut inside the first cut (cuts = rounds - 1);
 - the observed count is also right when the session has a checkpoint
   dir (reliable ``checkpoint`` instead of ``localCheckpoint``).
 """
@@ -66,9 +67,10 @@ def test_fixed_rounds_and_mode_check(spark):
         fixpoint(step, state, rounds=2, changed=F.col("x") != F.col("old"))
 
 
-def _jobs_in_cuts(spark, monkeypatch, modules):
-    """Wrap ``cut_lineage`` in ``modules``; returns a list that collects
-    the Spark jobs each cut launched."""
+def _jobs_in_cuts(spark, monkeypatch):
+    """Wrap ``lineage.cut_lineage``, which ``fixpoint`` calls through
+    the module global; returns a list that collects the Spark jobs each
+    cut launched."""
     per_cut = []
     real = lineage.cut_lineage
 
@@ -78,13 +80,12 @@ def _jobs_in_cuts(spark, monkeypatch, modules):
         per_cut.append(_job_id(spark) - j0)
         return out
 
-    for mod in modules:
-        monkeypatch.setattr(mod, "cut_lineage", counted)
+    monkeypatch.setattr(lineage, "cut_lineage", counted)
     return per_cut
 
 
 def test_round_launches_no_job_beyond_its_cut(spark, monkeypatch):
-    per_cut = _jobs_in_cuts(spark, monkeypatch, [lineage])
+    per_cut = _jobs_in_cuts(spark, monkeypatch)
     step, state, calls = _countdown(spark, 4)
     j0 = _job_id(spark)
     fixpoint(step, state, changed=F.col("x") != F.col("old"))
@@ -92,21 +93,56 @@ def test_round_launches_no_job_beyond_its_cut(spark, monkeypatch):
     assert _job_id(spark) - j0 == sum(per_cut)
 
 
-def test_connected_components_jobs_are_all_cuts(spark, monkeypatch):
-    """CC's only Spark jobs are its lineage cuts: one for the symmetric
-    edge set, one per round; no separate convergence count."""
-    per_cut = _jobs_in_cuts(spark, monkeypatch, [lineage, dedup])
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(5)], "first_id long, second_id long"
+def _cc_cuts(spark, monkeypatch, pairs, n_vertices):
+    """Run connected components on ``pairs``; returns the Spark jobs of
+    each lineage cut it made and its set of component ids. Asserts
+    every job the call launched ran inside a cut."""
+    per_cut = _jobs_in_cuts(spark, monkeypatch)
+    edges = spark.createDataFrame(pairs, "first_id long, second_id long")
+    vertices = spark.createDataFrame(
+        [(v,) for v in range(n_vertices)], "id long"
     )
-    vertices = spark.createDataFrame([(v,) for v in range(6)], "id long")
     j0 = _job_id(spark)
     out = dedup.connected_components(edges, vertices)
     assert _job_id(spark) - j0 == sum(per_cut)
+    return per_cut, {r["component_id"] for r in out.collect()}
+
+
+def test_connected_components_jobs_are_all_cuts(spark, monkeypatch):
+    """CC's only Spark jobs are its lineage cuts, one per round after
+    the first: round 1 is closed-form in the uncut prologue, so the
+    first cut runs the prologue, round 1 and round 2."""
+    chain = [(i, i + 1) for i in range(5)]
+    per_cut, comps = _cc_cuts(spark, monkeypatch, chain, 6)
     # 0-1-...-5: five rounds move the min label to vertex 5, a sixth
-    # confirms nothing changed; plus the edge-set cut
-    assert len(per_cut) == 1 + 6
-    assert {r["component_id"] for r in out.collect()} == {0}
+    # confirms nothing changed; rounds 2..6 are cuts
+    assert len(per_cut) == 5
+    assert comps == {0}
+
+
+@pytest.mark.parametrize(
+    "pairs, n_vertices, cuts, comps",
+    [
+        # every vertex is adjacent to its component's min, so round 1
+        # settles it and round 2, the first cut, confirms
+        (
+            [(0, 1), (3, 2), (4, 5), (4, 6), (5, 6)]
+            + [(a, b) for a in range(7, 11) for b in range(a + 1, 11)],
+            11,
+            1,
+            {0, 2, 4, 7},
+        ),
+        # the 30-chain of test_operators_dedup: 30 rounds
+        ([(i, i + 1) for i in range(29)], 30, 29, {0}),
+    ],
+    ids=["pairs_and_cliques", "chain30"],
+)
+def test_connected_components_cut_count(
+    spark, monkeypatch, pairs, n_vertices, cuts, comps
+):
+    per_cut, got = _cc_cuts(spark, monkeypatch, pairs, n_vertices)
+    assert len(per_cut) == cuts
+    assert got == comps
 
 
 _CHECKPOINT_PROBE = textwrap.dedent(

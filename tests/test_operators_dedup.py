@@ -47,6 +47,42 @@ def test_edges_given_high_to_low(spark):
     assert out == {3: 3, 4: 3, 5: 3}
 
 
+def _union_find(edge_pairs, vertex_ids):
+    """Reference components: min id of each vertex's component over the
+    whole edge list, reported for ``vertex_ids`` only."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edge_pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in vertex_ids}
+
+
+def test_degenerate_edges_match_union_find(spark):
+    cases = {
+        # self-loops, alone and on a component
+        "self_loops": ([(4, 4), (1, 1), (1, 2)], [1, 2, 3, 4]),
+        # one edge in both orientations, each repeated
+        "both_orientations": ([(7, 3), (3, 7), (7, 3), (3, 7), (7, 9)], [3, 7, 9]),
+        # endpoints 5 and 2 are not vertices: they still link 1, 6 and
+        # 8, 3, and stay out of the output
+        "missing_endpoints": ([(1, 5), (5, 6), (8, 2), (2, 3)], [1, 3, 6, 8]),
+        # hub 5 is not the component's min: the leaves learn 1 in round 2
+        "star_hub_not_min": ([(5, v) for v in (1, 6, 7, 8, 9)], [1, 5, 6, 7, 8, 9]),
+    }
+    for name, (edge_pairs, vertex_ids) in cases.items():
+        out = _cc(spark, edge_pairs, vertex_ids)
+        assert out == _union_find(edge_pairs, vertex_ids), name
+
+
 def test_split_components_drops_singletons(spark):
     members = spark.createDataFrame(
         [(1, "a", 100), (2, "a", 100), (3, "b", 100), (4, "a", 200)],

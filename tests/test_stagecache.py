@@ -2,8 +2,9 @@
 and its consensus-family instantiation. Every stage family — the
 suffix sort included — shares this code, so these tests cover them all:
 
-- per-app tempdir layout: orphaned ``ojo_stage_*`` dirs reaped by
-  mtime TTL, liveness judged by the freshest mtime of dir-or-child.
+- per-app tempdir layout: orphaned ``ojo_stage_*`` dirs (and legacy
+  ``ojo_suffix_*``/``ojo_stream_*`` dirs) reaped by mtime TTL,
+  liveness judged by the freshest mtime of dir-or-child.
 - shared-dir layout (``SPARK_GRAFT_STAGE_CACHE_DIR``): publish via
   tmp + atomic rename, reuse read-if-exists, reap stale ``__tmp_``
   debris only.
@@ -98,6 +99,35 @@ def test_sweep_spares_dir_with_fresh_child(tmp_path, monkeypatch):
 
     assert not dead.exists(), "stale dir with stale children must be reaped"
     assert live.exists(), "fresh child heartbeat must keep the dir alive"
+
+
+def test_sweep_reaps_stale_legacy_dirs(tmp_path, monkeypatch):
+    """Suffix and streaming dirs that older code wrote directly under
+    the temp dir go by the same TTL and liveness rule."""
+    import tempfile
+
+    root = tmp_path / "tmproot"
+    root.mkdir()
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(root))
+    old = stagecache._STALE_TTL_SECS + 3600
+    names = ["ojo_suffix_app1", "ojo_stream_mh_app1", "ojo_stream_abc"]
+    for name in names:
+        (root / name / "part").mkdir(parents=True)
+        _age(str(root / name / "part"), old)
+        _age(str(root / name), old)
+        (root / f"{name}_fresh").mkdir()
+    other = root / "ojo_other_app1"
+    other.mkdir()
+    _age(str(other), old)
+
+    monkeypatch.setattr(stagecache, "_swept", False)
+    monkeypatch.setattr(stagecache, "_DIRS", set())
+    stagecache._sweep_stale()
+
+    for name in names:
+        assert not (root / name).exists(), name
+        assert (root / f"{name}_fresh").exists(), name
+    assert other.exists(), "only the package's own prefixes are swept"
 
 
 def test_shared_dir_reaps_stale_tmp_keeps_fresh(spark, tmp_path, monkeypatch):

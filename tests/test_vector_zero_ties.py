@@ -1,6 +1,8 @@
-"""Oracle parity of the numpy vector kernels' keys on degenerate
-embeddings: a zero vector that is both a query and a neighbour, and
-more than k exact duplicates of one query's nearest neighbour.
+"""Oracle parity of the numpy vector kernels' keys, and of the ANN keys
+that score with the Catalyst ``cosine``, on degenerate embeddings: a
+zero vector that is both a query and a neighbour, and more than k
+exact duplicates of one query's nearest neighbour. The Catalyst divide
+must give NULL for the zero vector, not raise under ANSI mode.
 
 A pair with a zero side has no cosine (NULL in DuckDB), so it never
 passes a threshold, ranks after every real cosine (ties by id) and is
@@ -28,6 +30,7 @@ QUERY = 50  # in every query panel (vec_id % 50 == 0 and % 5 == 0)
 N_COPIES = 7  # > k = 5 duplicates of QUERY's nearest neighbour
 
 KEYS = [
+    "ann_topk_bruteforce",
     "near_dup_cosine",
     "near_dup_windowed",
     "hubness_audit",
@@ -90,6 +93,17 @@ def test_zero_vector_and_ties_match_oracle(spark, planted, planted_duck, key):
     ddf = planted_duck.sql(plans.ORACLES[key]).df()
     assert cols == sorted(ddf.columns)
     assert _canon(sdf.toPandas(), cols) == _canon(ddf, cols)
+
+
+@pytest.mark.parametrize("key", ["ann_lsh_bucketed", "ann_ivf"])
+def test_approximate_ann_gives_zero_vector_null_cosine(spark, planted, key):
+    # rows-only keys (no oracle): a pair with the zero vector 0 on
+    # either side has a NULL cosine instead of raising DIVIDE_BY_ZERO
+    # under ANSI mode; every other pair keeps a real cosine
+    rows = plans.QUERIES[key](spark, planted).collect()
+    zero = [r for r in rows if 0 in (r["query_id"], r["neighbor_id"])]
+    assert zero and all(r["cos_sim"] is None for r in zero)
+    assert all(r["cos_sim"] is not None for r in rows if r not in zero)
 
 
 def test_planted_query_sees_the_tie_and_the_zero_vector(spark, planted):
