@@ -150,14 +150,20 @@ def cosine_pairs(
 ) -> DataFrame:
     """Exact vector pairs (id_a < id_b, cos_sim) with cosine >=
     ``threshold`` among the (vec_id, embedding) rows of ``df``:
-    ``block_pairs`` and one BLAS matmul per (``keys``, bx, by) group. A
-    pair that shares several ``keys`` groups comes out once per group."""
+    ``block_pairs`` and one BLAS matmul per (``keys``, bx, by) group.
+    The ``keys`` columns come out with each pair, so a pair that shares
+    several ``keys`` groups comes out once per group, tagged with it."""
+    key_ddl = "".join(
+        f"`{k}` {df.schema[k].dataType.simpleString()}, " for k in keys
+    )
     return (
         block_pairs(df, nb)
         .groupBy(*keys, "bx", "by")
         .applyInPandas(
-            lambda pdf: _pairs_at_least(pdf, threshold),
-            schema="id_a bigint, id_b bigint, cos_sim double",
+            lambda key, pdf: _pairs_at_least(pdf, threshold).assign(
+                **dict(zip(keys, key))
+            ),
+            schema=key_ddl + "id_a bigint, id_b bigint, cos_sim double",
         )
     )
 

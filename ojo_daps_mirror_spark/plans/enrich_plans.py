@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -351,6 +351,32 @@ N_WINDOWS = (HORIZON_DAYS - WINDOW_DAYS) // WINDOW_STRIDE + 1
 WINDOWED_COS = 0.4    # same threshold as near_dup_cosine
 
 
+def _day(vec_id: str) -> Column:
+    """The pseudo-date of a vector, in days."""
+    return F.col(vec_id) % HORIZON_DAYS
+
+
+def _first_window(day: Column) -> Column:
+    """Id of the first window that covers ``day``: the least w >= 0
+    with w * WINDOW_STRIDE + WINDOW_DAYS - 1 >= day."""
+    first = F.ceil((day - (WINDOW_DAYS - 1)) / WINDOW_STRIDE)
+    return F.greatest(first, F.lit(0)).cast("int")
+
+
+def _windows_of(day: Column) -> Column:
+    """One row ``w`` per window that covers ``day``, for a select.
+
+    A day's windows are the contiguous id range [first, last], last the
+    greatest w < N_WINDOWS with w * WINDOW_STRIDE <= day (ceil and
+    floor of exact integer quotients). A day no
+    window covers has first > last and yields no row; Spark's
+    ``sequence`` would count down over such a range, so it is never
+    built."""
+    first = _first_window(day)
+    last = F.least(F.floor(day / WINDOW_STRIDE), F.lit(N_WINDOWS - 1)).cast("int")
+    return F.explode(F.when(first <= last, F.sequence(first, last))).alias("w")
+
+
 def _windows_sql() -> str:
     rows = ", ".join(
         f"({w}, {w * WINDOW_STRIDE}, {w * WINDOW_STRIDE + WINDOW_DAYS - 1})"
@@ -417,37 +443,36 @@ def near_dup_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference: flows/enrich/deduplication.py — ads are only compared
     within 8-week 50%-overlapping windows (deduplication_utils.py:
     get_sliding_windows), one FAISS index per window. Here each vector
-    maps to its 1–2 windows (a generate-free explode against a tiny
-    broadcast window dim; pseudo-date is derived deterministically from
-    vec_id since testdata embeddings carry no timestamp), then the
+    explodes to its 1–2 windows, computed from its day by integer
+    arithmetic (``_windows_of``; the pseudo-date is derived
+    deterministically from vec_id since testdata embeddings carry no
+    timestamp), so there is no window table and no join. The
     within-window all-pairs scan runs as BLOCK-PAIR tasks: rows hash
     to B blocks (B from estimated corpus volume; 1 at every provided
     SF), each unordered block pair (bx ≤ by) is one applyInPandas
     task (functions/vectors.py:cosine_pairs), and a pair of vectors
-    meets in exactly ONE task. The O(m²)
-    work per window is the exact-scan contract, but the 16x audit
-    showed one-task-per-window serialises it onto one core as windows
-    fatten (49.7 s at 16x); block pairs spread the same work over
-    B(B+1)/2 tasks per window (shuffle grows ×B — embeddings are
+    meets in exactly ONE task per shared window. A pair that shares
+    two windows is kept only from its first shared window,
+    greatest(first(day_a), first(day_b)): a map-side filter, no dedup
+    shuffle.
+
+    The O(m²) work per window is the exact-scan contract, but the 16x
+    audit showed one-task-per-window serialises it onto one core as
+    windows fatten (49.7 s at 16x); block pairs spread the same work
+    over B(B+1)/2 tasks per window (shuffle grows ×B — embeddings are
     narrow) and the wall-clock follows the cluster, not the window.
     """
     n_blocks = _window_blocks(sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    windows = spark.createDataFrame(
-        [
-            (w, w * WINDOW_STRIDE, w * WINDOW_STRIDE + WINDOW_DAYS - 1)
-            for w in range(N_WINDOWS)
-        ],
-        "w INT, lo INT, hi INT",
+    assigned = load_table(spark, sf_dir, "embeddings").select(
+        _windows_of(_day("vec_id")), "vec_id", "embedding"
     )
-    day = F.col("vec_id") % HORIZON_DAYS
-    assigned = emb.join(
-        F.broadcast(windows), (day >= F.col("lo")) & (day <= F.col("hi"))
-    ).select("w", "vec_id", "embedding")
-    # a pair sharing both of its windows comes out of each: dedup
+    first_shared = F.greatest(
+        _first_window(_day("id_a")), _first_window(_day("id_b"))
+    )
     return (
         cosine_pairs(assigned, n_blocks, WINDOWED_COS, keys=("w",))
-        .dropDuplicates(["id_a", "id_b"])
+        .where(F.col("w") == first_shared)
+        .select("id_a", "id_b", "cos_sim")
         .orderBy("id_a", "id_b")
     )
 
@@ -507,6 +532,13 @@ def near_dup_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     than sparse ones, which is what makes the reference robust across
     both (faiss_utils.py:103 find_similar_vectors).
 
+    Windows come from the same day arithmetic as near_dup_windowed
+    (``_windows_of``), and each (vector, window) row explodes to its
+    salts with ``sequence``: no window table, no join. Unlike
+    near_dup_windowed, a pair is not kept from its first shared window:
+    its score depends on the window's density mean, so the key is the
+    MAX over the shared windows.
+
     Scale shape: the window count bounds task parallelism (the
     reference's per-window-FAISS-index memory contract), so the QUERY
     side is additionally salted — every (window, salt) task receives
@@ -529,19 +561,14 @@ def near_dup_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     n_salt = ADAPTIVE_QUERY_SALT * _window_blocks(sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    windows = spark.createDataFrame(
-        [
-            (w, w * WINDOW_STRIDE, w * WINDOW_STRIDE + WINDOW_DAYS - 1, s)
-            for w in range(N_WINDOWS)
-            for s in range(n_salt)
-        ],
-        "w INT, lo INT, hi INT, salt INT",
+    assigned = load_table(spark, sf_dir, "embeddings").select(
+        _windows_of(_day("vec_id")), "vec_id", "embedding"
+    ).select(
+        "w",
+        F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))).alias("salt"),
+        "vec_id",
+        "embedding",
     )
-    day = F.col("vec_id") % HORIZON_DAYS
-    assigned = emb.join(
-        F.broadcast(windows), (day >= F.col("lo")) & (day <= F.col("hi"))
-    ).select("w", "salt", "vec_id", "embedding")
 
     def window_adaptive(pdf):
         ids = pdf["vec_id"].to_numpy()

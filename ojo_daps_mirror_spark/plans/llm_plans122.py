@@ -25,7 +25,7 @@ from pyspark.sql.window import Window
 
 from ..functions.rounding import round_eps, sql_round
 from ..functions.stats import normal_ppf, sql_normal_ppf
-from ..sources import load_table
+from ..sources import load_table, local_frame
 from . import register
 
 # ---------------------------------------------------------------- B230
@@ -304,7 +304,7 @@ def greedy_vocab_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("covered_cum", LongType(), False),
         ]
     )
-    out = spark.createDataFrame(rows, schema)
+    out = local_frame(spark, rows, schema)
     # |vocab| attaches as a broadcast 1-row scalar over the persisted
     # (doc, tok) frame — never an eager distinct().count() in the query
     # path (guide §5; same double arithmetic as the old int literal)

@@ -22,7 +22,7 @@ from pyspark.sql.window import Window
 from ..functions.rounding import round_eps, sql_round
 from ..functions.vectors import cosine, sql_cosine
 from ..operators.attach import attach_scalars, scalars
-from ..sources import load_table
+from ..sources import load_table, local_frame
 from . import register
 
 # ---------------------------------------------------------------- B240
@@ -358,7 +358,8 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         radii.append(radius)
         d.unpersist()
         d = d_new
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [
             (step, cid, radii[i])
             for i, (step, cid) in enumerate(rows)

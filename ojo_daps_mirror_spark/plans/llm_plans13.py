@@ -13,7 +13,7 @@ from pyspark.sql.window import Window
 
 from ..functions.rounding import round_eps, sql_round
 from ..functions.vectors import sql_cosine, top_k, unit_rows
-from ..sources import load_table
+from ..sources import load_table, local_frame
 from . import register
 
 # ---------------------------------------------------------------- B49
@@ -246,7 +246,8 @@ def knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at 100 TB the label attach is a key-shuffle join; here the label
     # dim broadcasts
     labels = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("label").alias("nlabel"))
-    truth = spark.createDataFrame(
+    truth = local_frame(
+        spark,
         [(int(r["vec_id"]), int(r["label"])) for r in queries],
         "query_id bigint, true_label int",
     )

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import round_eps, sql_round
 from ..functions.text import hash64, sql_hash64
-from ..sources import load_table
+from ..sources import load_table, local_frame
 from . import register
 
 # ---------------------------------------------------------------- C85
@@ -96,7 +96,7 @@ def embedding_pca_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     if v[np.flatnonzero(np.abs(v) > 1e-12)[0]] < 0:
         v = -v
     rows = [(int(i), float(round(x + 1e-9, 6))) for i, x in enumerate(v)]
-    out = spark.createDataFrame(rows, "dim int, loading double")
+    out = local_frame(spark, rows, "dim int, loading double")
     return out.withColumn(
         "eigenvalue", F.round(F.lit(lam) + 1e-9, 4)
     ).orderBy("dim")

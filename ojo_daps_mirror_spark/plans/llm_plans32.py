@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import sql_tokens, tokens
 from ..operators.lineage import cut_lineage
-from ..sources import load_table
+from ..sources import load_table, local_frame
 from . import register
 
 BPE_MERGES = 3
@@ -162,6 +162,8 @@ def bpe_merge_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _spark_merge_fold(F.col("seq"), top["x"], top["y"])
             ),
         ).transform(cut_lineage)
-    return spark.createDataFrame(
-        rules, "iter int, left_sym string, right_sym string, pair_count bigint"
+    return local_frame(
+        spark,
+        rules,
+        "iter int, left_sym string, right_sym string, pair_count bigint",
     )

@@ -18,7 +18,7 @@ from ..functions.rounding import round_eps, sql_round
 from ..functions.text import hash64, sql_hash64
 from ..operators.attach import scalars
 from ..operators.lineage import cut_lineage
-from ..sources import load_table
+from ..sources import load_table, local_frame
 from . import register
 
 # ---------------------------------------------------------------- B114
@@ -267,9 +267,7 @@ def sssp_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     edges = edges.transform(cut_lineage)
-    dist = spark.createDataFrame(
-        [(SSSP_SRC, 0)], "node: bigint, dist: bigint"
-    )
+    dist = local_frame(spark, [(SSSP_SRC, 0)], "node bigint, dist bigint")
     for _ in range(SSSP_ROUNDS):
         relaxed = (
             dist.join(edges, dist["node"] == edges["src"])

@@ -17,7 +17,7 @@ from pyspark.sql.window import Window
 from ..functions.rounding import round_eps, sql_round
 from ..operators.dedup import connected_components
 from ..operators.attach import scalars
-from ..sources import load_table
+from ..sources import load_table, local_frame
 from . import register
 from .text_plans import _C5_ORACLE, dedup_minhash_lsh
 
@@ -194,7 +194,7 @@ def ql_dirichlet_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = qterms.groupBy("doc_id", "tok").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
-    qdim = spark.createDataFrame([(t,) for t in QL_QUERY], "tok: string")
+    qdim = local_frame(spark, [(t,) for t in QL_QUERY], "tok string")
     grid = (
         doclen.transform(scalars(qdim))
         .join(F.broadcast(cf), "tok")

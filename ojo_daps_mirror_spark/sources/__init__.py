@@ -1,3 +1,3 @@
-from .registry import TABLES, load_table, load_tables
+from .registry import TABLES, load_table, load_tables, local_frame
 
-__all__ = ["TABLES", "load_table", "load_tables"]
+__all__ = ["TABLES", "load_table", "load_tables", "local_frame"]

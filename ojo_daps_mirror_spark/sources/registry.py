@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -54,6 +55,32 @@ def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     elif dtype == "timestamp_ntz":
         df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
+
+
+def local_frame(
+    spark: SparkSession, rows: list, schema: str | StructType
+) -> DataFrame:
+    """A frame of driver-side ``rows`` (tuples in ``schema`` order;
+    ``schema`` is a DDL string or a ``StructType``), planned as a
+    ``LocalRelation``.
+
+    ``spark.createDataFrame(list)`` builds a Python RDD, so every scan
+    of the frame starts one Python-worker task per default partition,
+    however few its rows. Built from an Arrow table, the rows ship to
+    the JVM once and the frame is a leaf that holds them: scanning it
+    starts no Python worker, and collecting it launches no Spark job.
+    NULLs, non-nullable fields and an empty ``rows`` keep their meaning.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(arrow.names, r)) for r in rows], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def load_tables(

@@ -31,7 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources import load_table
+from ..sources import load_table, local_frame
 
 MATCH_SCHEMA = "id_a bigint, id_b bigint, jaccard double"
 
@@ -130,7 +130,7 @@ def read_matches(spark: SparkSession, out_dir: str) -> DataFrame:
     if not os.path.isdir(out_dir) or not any(
         e.startswith("batch_id=") for e in os.listdir(out_dir)
     ):
-        return spark.createDataFrame([], MATCH_SCHEMA)
+        return local_frame(spark, [], MATCH_SCHEMA)
     return (
         spark.read.schema(MATCH_SCHEMA)
         .option("basePath", out_dir)

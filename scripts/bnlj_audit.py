@@ -3,7 +3,7 @@
 Every BNLJ_OK entry (tests/test_plan_guardrails.py) is individually
 argued — broadcast scalar/dim attaches with range predicates, bounded
 grids, or declared all-pairs eval baselines — but only a few sat in
-the heavy stress set. This harness times ALL 34 at 1x and 16x replica
+the heavy stress set. This harness times ALL 32 at 1x and 16x replica
 volume (same replica builder as scripts/scale_stress.py, so workload
 shape is preserved and only size grows) and flags any that grows
 superlinearly: an allowlist seat is only safe if the argued bound
@@ -63,8 +63,6 @@ DOCS_KEYS = [
     "lexical_semantic_agreement",
     "minhash_jaccard_vs_exact",
     "ndcg_eval",
-    "near_dup_adaptive",
-    "near_dup_windowed",
     "neardup_transitivity_audit",
     "onebit_retrieval_agreement",
     "retrieval_mrr",

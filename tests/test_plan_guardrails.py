@@ -80,8 +80,6 @@ BNLJ_OK = {
     "max_consensus_line",  # |weeks|-dim candidate x point residual grid
     "minhash_jaccard_vs_exact",  # |sources|-dim pair grid (est vs exact)
     "ndcg_eval",  # declared all-pairs eval harness (C8's contract)
-    "near_dup_adaptive",  # broadcast window dim, range condition
-    "near_dup_windowed",  # broadcast window dim, range condition
     "node_affinity_audit",  # lexicon x communities dense affinity grid zero-fill (the reference's matrix shape, cluster_utils.py:437)
     "cluster_affinity_audit",  # same grid (shared _affinity_grid), aggregated to communities^2
     "neardup_transitivity_audit",  # exact threshold edge set

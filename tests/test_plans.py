@@ -223,9 +223,20 @@ def test_soc_clean_title_is_codegen_map_pass(spark, sf_dir):
 
 def test_near_dup_adaptive_single_window_shuffle(spark, sf_dir):
     plan = _plan(spark, sf_dir, "near_dup_adaptive")
-    # per-window pandas pass + final max agg; window dim is broadcast
-    assert "FlatMapGroupsInPandas" in plan
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    # windows and salts are map-side explodes: no window table, no
+    # join; one per-(window, salt) pandas pass + final max agg
+    assert "Join" not in plan
+    assert plan.count("FlatMapGroupsInPandas (") == 1
+    assert "BatchEvalPython" not in plan
+
+
+def test_near_dup_windowed_no_join_no_dedup(spark, sf_dir):
+    plan = _plan(spark, sf_dir, "near_dup_windowed")
+    # windows are a map-side explode, and a pair is kept from its first
+    # shared window by a filter: no join, no dedup aggregate
+    assert "Join" not in plan
+    assert plan.count("FlatMapGroupsInPandas (") == 1
+    assert "HashAggregate" not in plan
     assert "BatchEvalPython" not in plan
 
 
